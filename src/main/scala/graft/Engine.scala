@@ -33,8 +33,11 @@ object Engine {
   def session(parallelism: Int = Runtime.getRuntime.availableProcessors(),
       master: Option[String] = None,
       appName: String = "graft"): SparkSession = {
-    val b = SparkSession.builder()
-      .master(master.getOrElse(s"local[$parallelism]"))
+    val m = master.getOrElse(s"local[$parallelism]")
+    // local-cluster executors get graft's classpath and JVM opens;
+    // identity for local[N]
+    val b = graft.tools.ClusterConf.forMaster(SparkSession.builder(), m)
+      .master(m)
       .appName(appName)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.shuffle.partitions", parallelism.toString)

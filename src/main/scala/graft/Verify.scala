@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,14 +8,12 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER=local-cluster[2,8,4096] runs the dump with
     // REAL multi-JVM executors (task serialization, executor-side
-    // codegen classloading, broadcast transport — see ClusterConf)
-    val master = graft.tools.ClusterConf.master(cpus)
-    val spark = graft.tools.ClusterConf.forMaster(
-      SparkSession.builder().master(master), master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // codegen classloading, broadcast transport — see ClusterConf).
+    // The session is Engine.session's, so the gate checks the
+    // configuration adopters run
+    val spark = Engine.session(cpus.toInt,
+      master = Some(graft.tools.ClusterConf.master(cpus)),
+      appName = "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q1,q2 dumps (and declares oracles for) a subset

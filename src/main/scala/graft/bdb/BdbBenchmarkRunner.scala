@@ -28,19 +28,8 @@ object BdbBenchmarkRunner {
     val outCsv = args(1)
     val repeats = if (args.length > 2) args(2).toInt else 5
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // At local benchmark scales shuffle partitions = cores; past the
-    // point where a partition's shuffle block outgrows executor
-    // memory, scale partitions with the data instead (the cluster
-    // discipline; SPARK_GRAFT_SHUFFLE_PARTITIONS probes it here)
-    val shufP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bdb-benchmark")
-      .config("spark.sql.shuffle.partitions", shufP)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session(cpus.toInt,
+      appName = "graft-bdb-benchmark")
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_BDB_ONLY=q18,q30 limits the suite for profiling
     val only = sys.env.get("SPARK_GRAFT_BDB_ONLY")

@@ -450,14 +450,9 @@ object BdbDataGen {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: BdbDataGen <csvOutBase> <scaleFactor> [clickSkew]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-bdb-datagen")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      appName = "graft-bdb-datagen")
     spark.sparkContext.setLogLevel("WARN")
     try writeCsv(spark, args(0), Counts(args(1).toDouble),
       if (args.length > 2) args(2).toDouble else 1.0)

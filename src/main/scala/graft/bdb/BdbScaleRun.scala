@@ -43,14 +43,8 @@ object BdbScaleRun {
     val repeats = if (args.length > 2) args(2).toInt else 2
     val clickSkew = if (args.length > 3) args(3).toDouble else 1.0
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bdb-scale-run")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session(cpus.toInt,
+      appName = "graft-bdb-scale-run")
     spark.sparkContext.setLogLevel("WARN")
     try {
       val base =

@@ -155,8 +155,8 @@ object Dedup {
         candidates
           .join(sizes.as("pa"), col("id_1") === col(s"pa.$id"))
           .join(sizes.as("pb"), col("id_2") === col(s"pb.$id"))
-          .filter(least(col("pa.n"), col("pb.n")) * 100 >=
-            greatest(col("pa.n"), col("pb.n")) * minJaccardPct)
+          .filter(atLeastPct(least(col("pa.n"), col("pb.n")),
+            greatest(col("pa.n"), col("pb.n")), minJaccardPct))
           .select(col("id_1"), col("id_2"))
       }
     val counted = pruned
@@ -185,11 +185,17 @@ object Dedup {
     * any document's shingle-set size (DedupSpec proves the boundary
     * cases). `thresholdPct = 0` keeps the unfiltered contract.
     */
-  private def thresholded(counted: DataFrame, union: Column,
+  private[graft] def thresholded(counted: DataFrame, union: Column,
       thresholdPct: Int): DataFrame =
     if (thresholdPct <= 0) counted
-    else counted.filter(
-      col("n_common") * 100 >= union * thresholdPct)
+    else counted.filter(atLeastPct(col("n_common"), union, thresholdPct))
+
+  /** `100 * part >= pct * whole`, multiplied in long space: the
+    * shingle counts are ints, and an int product overflows (an ANSI
+    * error) once a count passes 2^31/100, about 21M shingles.
+    */
+  private def atLeastPct(part: Column, whole: Column, pct: Int): Column =
+    part.cast("long") * 100 >= whole.cast("long") * pct
 
   /** Word n-grams WITH multiplicity (one row per occurrence) — the
     * input for repetition analysis, where how often the top n-gram
@@ -369,8 +375,8 @@ object Dedup {
     val pruned =
       if (minJaccardPct <= 0) withSizes
       else withSizes.filter(
-        least(col("na"), col("nb")) * 100 >=
-          greatest(col("na"), col("nb")) * minJaccardPct)
+        atLeastPct(least(col("na"), col("nb")),
+          greatest(col("na"), col("nb")), minJaccardPct))
     pruned
       .join(shingles.as("sa"), col("id_1") === col(s"sa.$id"))
       .join(shingles.as("sb"),
@@ -407,8 +413,8 @@ object Dedup {
         candidates
           .join(sizes.as("pa"), col("id_1") === col(s"pa.$id"))
           .join(sizes.as("pb"), col("id_2") === col(s"pb.$id"))
-          .filter(least(col("pa.n"), col("pb.n")) * 100 >=
-            greatest(col("pa.n"), col("pb.n")) * minJaccardPct)
+          .filter(atLeastPct(least(col("pa.n"), col("pb.n")),
+            greatest(col("pa.n"), col("pb.n")), minJaccardPct))
           .select(col("id_1"), col("id_2"))
       }
     pruned
@@ -448,8 +454,8 @@ object Dedup {
         candidates
           .join(sizes.as("pa"), col("id_1") === col(s"pa.$id"))
           .join(sizes.as("pb"), col("id_2") === col(s"pb.$id"))
-          .filter(least(col("pa.n"), col("pb.n")) * 100 >=
-            greatest(col("pa.n"), col("pb.n")) * minJaccardPct)
+          .filter(atLeastPct(least(col("pa.n"), col("pb.n")),
+            greatest(col("pa.n"), col("pb.n")), minJaccardPct))
           .select(col("id_1"), col("id_2"))
       }
     pruned
@@ -510,8 +516,8 @@ object Dedup {
     // integer-space equivalence, applied to the smaller set size
     val filtered =
       if (minMaxContainmentPct <= 0) counted
-      else counted.filter(col("n_common") * 100 >=
-        least(col("za.n"), col("zb.n")) * minMaxContainmentPct)
+      else counted.filter(atLeastPct(col("n_common"),
+        least(col("za.n"), col("zb.n")), minMaxContainmentPct))
     filtered
       .select(col("id_1"), col("id_2"), col("n_common"),
         (col("n_common").cast("double") / col("za.n")).as("c_1in2"),

@@ -158,7 +158,7 @@ object StarCC {
     * that is what lets the node side join WITHOUT its own distinct
     * exchange (the r16 form paid one full exchange of the roots
     * table purely to re-prove this invariant). */
-  def groupSizes(roots: DataFrame): DataFrame =
+  private[graft] def groupSizes(roots: DataFrame): DataFrame =
     roots.groupBy(col("root").as("group_id"))
       .agg(count(lit(1)).as("_m"))
       .join(roots.select(col("node").as("group_id"))

@@ -209,15 +209,9 @@ object Extras extends Suite {
     // The same operator reached DECLARATIVELY: the query is the plain
     // row_number window idiom, and the TopKRewrite optimizer rule
     // (Rule[LogicalPlan], SURVEY §2e) substitutes TopKPerKeyExec —
-    // plan shape asserted in TopKSpec.
-    Q("x08_topk_rewrite", (s0, d) => {
-      // The rule mutates session-wide optimizer state
-      // (experimental.extraOptimizations), so install it on an
-      // ISOLATED child session — running x08 must not silently
-      // change plan (and, for non-total orders, tie) selection for
-      // every query the shared Verify/Bench session runs afterwards.
-      val s = s0.newSession()
-      graft.plans.TopKRewrite.install(s)
+    // plan shape asserted in TopKSpec. Engine.session installs the
+    // rule.
+    Q("x08_topk_rewrite", (s, d) => {
       val c = Tables.load(s, d, "customer")
         .select("c_custkey", "c_nationkey", "c_acctbal")
       val w = org.apache.spark.sql.expressions.Window

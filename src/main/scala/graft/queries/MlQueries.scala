@@ -203,9 +203,12 @@ object MlQueries extends Suite {
     // ntok rides the ted projection (same tokens() the word explode
     // uses, so the count is the exploded row count by construction):
     // the per-(doc, class) score completion below needs it and this
-    // is the scan the docs already come from — no extra pass
+    // is the scan the docs already come from — no extra pass. NULL
+    // text has no tokens (size(NULL) is NULL under ANSI), so it scores
+    // prior-only like the empty string
     val ted = base.filter(isTest).select(col("doc_id"), col("lang"),
-      size(Text.tokens(col("text"))).cast("long").as("ntok"))
+      coalesce(size(Text.tokens(col("text"))), lit(0)).cast("long")
+        .as("ntok"))
     // carry lang through the explode: the per-word class label comes
     // straight off the document row, not from a token-stream join
     // back to trd/ted (two exchanges saved)

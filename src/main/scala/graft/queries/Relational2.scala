@@ -771,13 +771,9 @@ object Relational2 extends Suite {
     // EXCHANGE (v2 bucketing) — the bucketed-table contract a
     // clustered backend (KV hash ranges, bucketed warehouse table)
     // gives Spark. Exchange absence is asserted in SourcesSpec; this
-    // query hash-gates the results through the same plan.
+    // query hash-gates the results through the same plan. v2 bucketing
+    // is on in every Engine.session.
     Q("o61_clustered_source", (s, d) => {
-      // left ON for the session (the Tables.readerConfs precedent):
-      // plans lazily, so a scoped restore would disable it again
-      // before execution; the conf only activates for DSv2 scans that
-      // report a partitioning, so it is inert everywhere else
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
       s.read.format("graft.sources.SyntheticSource")
         .option("rows", 100000).option("clusterByUser", "true").load()
         .groupBy("user_id")

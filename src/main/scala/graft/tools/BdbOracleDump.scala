@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.bdb.BdbDataGen
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** One-shot dump of the deterministic BDB fixture (the 23-table
   * generator at its floor cardinalities — exactly [[graft.BdbFixture]]'s
@@ -55,13 +55,7 @@ object BdbOracleDump {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("bench/bdb_oracle")
     val floorMult = if (args.length > 1) args(1).toLong else 1L
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("bdb-oracle-dump")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session(8, appName = "bdb-oracle-dump")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(out).mkdirs()
     BdbDataGen.frames(spark, BdbDataGen.Counts(0.0, floorMult)).toSeq

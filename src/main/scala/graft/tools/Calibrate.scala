@@ -62,13 +62,7 @@ object Calibrate {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-calibrate")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session(32, appName = "graft-calibrate")
     spark.sparkContext.setLogLevel("ERROR")
     val (sat, light, shuf) = triple(spark, 5)
     println(f"[calibrate] saturating_32way_1G  ${sat}%.3f s  (quiet-window reference: see SCALE.md host-calibration row)")

@@ -15,8 +15,9 @@ import org.apache.spark.sql.SparkSession
   * JDK-17 --add-opens flags (this app starts as plain `java -cp`,
   * not spark-submit), so both are forwarded explicitly.
   *
-  * Usage: `SPARK_GRAFT_MASTER=local-cluster[2,8,4096]` on any graft
-  * main that calls [[forMaster]] (Verify, Bench). No-op for local[*].
+  * Usage: `SPARK_GRAFT_MASTER=local-cluster[2,8,4096]` on the mains
+  * that read [[master]] (Verify, Bench). [[forMaster]] runs inside
+  * Engine.session and Bench, and is a no-op for local[*].
   */
 object ClusterConf {
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Writes PLANS.md: formatted physical plans for the headline
@@ -99,13 +98,7 @@ object DumpPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-plans")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session(4, appName = "graft-plans")
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb ++= "# PLANS — headline physical plans (generated by graft.tools.DumpPlans)\n\n"

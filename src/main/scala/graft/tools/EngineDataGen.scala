@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for the ENGINE suite's star schema
@@ -69,13 +69,8 @@ object EngineDataGen {
     val mult = if (args.length > 1) args(1).toInt else 10
     val template = "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-engine-datagen")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session(cpus.toInt,
+      appName = "graft-engine-datagen")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Optimization-round empirical profile: run queries through the
@@ -21,16 +20,11 @@ object ExecStats {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val repeats = args.lift(1).map(_.toInt).getOrElse(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-execstats")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "8388608"))
-      .getOrCreate()
+    val spark = graft.Engine.session(cpus.toInt,
+      appName = "graft-execstats")
+    // Bench's split size (see graft.Bench)
+    spark.conf.set("spark.sql.files.maxPartitionBytes",
+      sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "8388608"))
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicInteger
     val stages = new AtomicInteger

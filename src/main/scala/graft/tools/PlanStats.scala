@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Optimization-round triage: dump the formatted physical plan of
@@ -19,16 +18,11 @@ object PlanStats {
     val outDir = args.lift(1).getOrElse("plans/r16/all")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-planstats")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "8388608"))
-      .getOrCreate()
+    val spark = graft.Engine.session(cpus.toInt,
+      appName = "graft-planstats")
+    // Bench's split size (see graft.Bench)
+    spark.conf.set("spark.sql.files.maxPartitionBytes",
+      sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "8388608"))
     spark.sparkContext.setLogLevel("ERROR")
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)

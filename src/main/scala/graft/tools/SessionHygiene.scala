@@ -20,8 +20,9 @@ import org.apache.spark.sql.SparkSession
   * probe-corpus incident, SCALE.md). Safe between INDEPENDENT
   * queries that each rebuild from source (the three call sites);
   * unsafe inside any loop that holds a checkpointed frame across
-  * iterations — there, unpersist exactly what you pinned
-  * (ProbeCoOccurJoin's discipline).
+  * iterations — there, keep a handle on each frame you pinned and
+  * unpersist exactly those, and only after the last action that
+  * reads them has run.
   *
   * @param blocking true = wait for block removal so the unpersist
   *                 work is never billed to the NEXT timed query (the

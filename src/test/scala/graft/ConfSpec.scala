@@ -7,18 +7,16 @@ package graft
   * flipped for every LATER query in the same session — is invisible
   * to the per-query DuckDB gate (each query is right; the SESSION
   * drifts). This spec builds every registered query in one session
-  * and asserts the conf map is unchanged afterward, except the four
+  * and asserts the conf map is unchanged afterward, except the three
   * DOCUMENTED session-scoped settings:
   *
   *  - `spark.sql.legacy.parquet.nanosAsLong` and
   *    `spark.sql.parquet.inferTimestampNTZ.enabled` — Tables.load's
   *    reader contract for the nanos-timestamped events parquet,
   *    deliberately session-wide (every consumer needs them);
-  *  - `spark.sql.sources.v2.bucketing.enabled` — o61, documented
-  *    left-on (lazy planning: a scoped restore would disable it
-  *    before execution; inert for non-reporting sources);
   *  - `spark.sql.cteRecursionRowLimit` — o63's runaway valve,
-  *    documented table-sized (same lazy-planning rationale).
+  *    documented table-sized (lazy planning: a scoped restore would
+  *    undo it before execution).
   *
   * Any NEW key in this list needs the same written justification —
   * the allowlist is the contract, not a suppression.
@@ -35,7 +33,6 @@ class ConfSpec extends SparkSpec {
     val allowed = Set(
       "spark.sql.legacy.parquet.nanosAsLong",
       "spark.sql.parquet.inferTimestampNTZ.enabled",
-      "spark.sql.sources.v2.bucketing.enabled",
       "spark.sql.cteRecursionRowLimit")
     val failures = scala.collection.mutable.ListBuffer[String]()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

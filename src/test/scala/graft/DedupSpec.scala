@@ -298,6 +298,17 @@ class DedupSpec extends SparkSpec {
         .filter(greatest(col("c_1in2"), col("c_2in1")) >= 0.51)))
   }
 
+  test("thresholded compares counts above 2^31/100 without int overflow") {
+    // ~25M-shingle docs: 100 * n_common passes Int.MaxValue, an ANSI
+    // overflow error if the product is taken in int space
+    val counted = Seq((1L, 2L, 25000000, 30000000, 30000000))
+      .toDF("id_1", "id_2", "n_common", "na", "nb")
+    val union = col("na") + col("nb") - col("n_common")
+    // jaccard = 25M / 35M = 0.714...
+    assert(Dedup.thresholded(counted, union, 71).count() === 1L)
+    assert(Dedup.thresholded(counted, union, 72).count() === 0L)
+  }
+
   test("d12 pipeline: depth-9 near-dup chain resolves to ONE group " +
     "(past min-label propagation's diameter-5 bound)") {
     import org.apache.spark.sql.functions._

@@ -1,17 +1,19 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Engine.session applies the full configuration contract in one
-  * call — the invariants every other suite assumes individually.
+  * call — the invariants every other suite assumes individually. The
+  * shared test session IS an Engine.session, so the contract is
+  * asserted on it directly.
   */
-class EngineSpec extends AnyFunSuite {
+class EngineSpec extends SparkSpec {
 
   test("session carries the engine's configuration contract") {
-    // getOrCreate reuses the shared test session's context but must
-    // still apply session-level confs and installations
-    val s = Engine.session(parallelism = 4)
+    val s = spark
     assert(s.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(s.conf.get("spark.sql.shuffle.partitions") === "4")
     assert(s.conf.get("spark.sql.adaptive.enabled") === "true")
     assert(s.conf.get("spark.sql.sources.v2.bucketing.enabled") === "true")
     // native functions resolvable from SQL
@@ -21,9 +23,27 @@ class EngineSpec extends AnyFunSuite {
     // TopK machinery installed
     assert(s.experimental.extraOptimizations
       .contains(graft.plans.TopKRewriteRule))
-    // idempotent: calling again must not double-install
-    Engine.session(parallelism = 4)
+    // idempotent: calling again reuses the session and must not
+    // double-install
+    assert(Engine.session(parallelism = 4) eq s)
     assert(s.experimental.extraOptimizations
       .count(_ == graft.plans.TopKRewriteRule) === 1)
+  }
+
+  test("only Engine and Bench build a SparkSession in main sources") {
+    // one session builder: Verify, the tools and the tests all run on
+    // Engine.session; Bench keeps its own (its configuration is part
+    // of the benchmark contract)
+    val root = Paths.get("src/main/scala")
+    val allowed = Set("graft/Engine.scala", "graft/Bench.scala")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    assert(files.nonEmpty, s"no sources under ${root.toAbsolutePath}")
+    val builders = files.filter { (p: Path) =>
+      Files.readString(p).linesIterator
+        .exists(l => l.contains("SparkSession.builder()") &&
+          !l.trim.startsWith("*") && !l.trim.startsWith("//"))
+    }.map(root.relativize(_).toString).toSet
+    assert(builders -- allowed === Set.empty[String])
   }
 }

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * the arithmetic completion wsum = msum + (ntok - mcnt) * def_ppm.
   * This spec pins the completion identity against the OLD per-token
   * formulation on a corpus built to hit the edges the rewrite could
-  * break: an EMPTY test document (ntok = 0 — must score prior-only),
+  * break: an EMPTY and a NULL test document (ntok = 0 — must score
+  * prior-only),
   * a test document whose true lang is UNSEEN in training (scores
   * only over the trained class list), a document with every word
   * unseen (pure def_ppm path), and multi-class word overlap.
@@ -26,7 +27,9 @@ class NbConfusionSpec extends SparkSpec {
       (2L, "banana banana date", "aa", "s1"),
       (3L, "egg fig grape egg", "bb", "s2"),
       (4L, "fig fig grape banana", "bb", "s2"),
+      (5L, "grape egg", "bb", "s2"),              // prior argmax is bb
       (10L, "", "aa", "s1"),                       // EMPTY test doc
+      (50L, null, "nn", "s4"),                     // NULL text test doc
       (20L, "apple egg zebra", "zz", "s3"),        // UNSEEN true lang
       (30L, "zebra yak xylo", "bb", "s2"),         // every word unseen
       (40L, "banana fig", "aa", "s1"))             // cross-class words
@@ -90,10 +93,13 @@ class NbConfusionSpec extends SparkSpec {
 
     assert(engine === reference)
     // the edges are actually present in the output: the unseen true
-    // lang appears (scored over trained classes), and the empty doc
-    // contributes one prior-only prediction
+    // lang appears (scored over trained classes), and the empty and
+    // NULL docs each contribute one prior-only prediction — for the
+    // NULL doc that is bb, the prior argmax, not the lexical-first aa
     assert(engine.exists(_._1 == "zz"), s"unseen-class row missing: $engine")
-    assert(engine.toSeq.map(_._3).sum === 4L,
-      s"4 test docs expected: $engine")
+    assert(engine.contains(("nn", "bb", 1L)),
+      s"NULL-text doc must predict the prior argmax: $engine")
+    assert(engine.toSeq.map(_._3).sum === 5L,
+      s"5 test docs expected: $engine")
   }
 }

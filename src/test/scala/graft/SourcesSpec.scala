@@ -105,40 +105,29 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("clustered scan elides the aggregation exchange (KeyGroupedPartitioning)") {
-    val key = "spark.sql.sources.v2.bucketing.enabled"
-    val prev = util.Try(spark.conf.get(key)).toOption
-    spark.conf.set(key, "true")
-    try {
-      val clustered = spark.read.format("graft.sources.SyntheticSource")
-        .option("rows", 5000).option("clusterByUser", "true").load()
-        .groupBy("user_id").agg(sum("amount_cents").as("cents"))
-      val plain = load(5000, 4)
-        .groupBy("user_id").agg(sum("amount_cents").as("cents"))
-      // identical results...
-      val a = clustered.orderBy("user_id").collect().toSeq
-      val b = plain.orderBy("user_id").collect().toSeq
-      assert(a === b)
-      // ...but the clustered read's plan has NO exchange before the
-      // aggregate: the source-reported user partitioning satisfies the
-      // aggregation's distribution (the DSv2 bucketed-table contract)
-      val p = clustered.queryExecution.executedPlan.toString
-      assert(!p.contains("Exchange hashpartitioning"),
-        s"clustered aggregate still shuffles:\n${p.take(3000)}")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    // v2 bucketing is on in every Engine.session
+    val clustered = spark.read.format("graft.sources.SyntheticSource")
+      .option("rows", 5000).option("clusterByUser", "true").load()
+      .groupBy("user_id").agg(sum("amount_cents").as("cents"))
+    val plain = load(5000, 4)
+      .groupBy("user_id").agg(sum("amount_cents").as("cents"))
+    // identical results...
+    val a = clustered.orderBy("user_id").collect().toSeq
+    val b = plain.orderBy("user_id").collect().toSeq
+    assert(a === b)
+    // ...but the clustered read's plan has NO exchange before the
+    // aggregate: the source-reported user partitioning satisfies the
+    // aggregation's distribution (the DSv2 bucketed-table contract)
+    val p = clustered.queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange hashpartitioning"),
+      s"clustered aggregate still shuffles:\n${p.take(3000)}")
   }
 
   test("storage-partitioned join: two clustered scans join with no shuffle") {
-    val confs = Seq(
-      "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      // force the shuffle decision to matter (no broadcast escape)
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) =>
-      k -> util.Try(spark.conf.get(k)).toOption
-    }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    // force the shuffle decision to matter (no broadcast escape)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = util.Try(spark.conf.get(key)).toOption
+    spark.conf.set(key, "-1")
     try {
       def clustered(rows: Long) =
         spark.read.format("graft.sources.SyntheticSource")
@@ -155,9 +144,9 @@ class SourcesSpec extends SparkSpec {
       val p = joined.queryExecution.executedPlan.toString
       assert(!p.contains("Exchange hashpartitioning"),
         s"storage-partitioned join still shuffles:\n${p.take(4000)}")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
     }
   }
 }
