@@ -16,22 +16,16 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_MASTER=local-cluster[n,c,m] → real executor JVMs
-    val master = graft.tools.ClusterConf.master(cpus)
-    val spark = graft.tools.ClusterConf.forMaster(
-      SparkSession.builder().master(master), master)
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the testdata ships ONE parquet file per table; at the default
-      // 128 MB split size every scan is a single task no matter how
-      // many cores the box has. 8 MB splits the row-grouped files
-      // across the executor threads (a real cluster reading many-file
-      // tables tunes this to its own file sizes instead).
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "8388608"))
-      .getOrCreate()
+    val spark = Engine.session(cpus.toInt,
+      master = Some(graft.tools.ClusterConf.master(cpus)),
+      appName = "graft-bench")
+    // the testdata ships ONE parquet file per table; at the default
+    // 128 MB split size every scan is a single task no matter how
+    // many cores the box has. 8 MB splits the row-grouped files
+    // across the executor threads (a real cluster reading many-file
+    // tables tunes this to its own file sizes instead).
+    spark.conf.set("spark.sql.files.maxPartitionBytes",
+      sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "8388608"))
     // ERROR (not WARN) from the very start: streaming queries emit a
     // burst of WARN lines (AQE-disabled, checkpoint cleanup, job-group
     // cancel) and sbt pumps forked stderr on a separate thread — a

@@ -17,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: `SPARK_GRAFT_MASTER=local-cluster[2,8,4096]` on the mains
   * that read [[master]] (Verify, Bench). [[forMaster]] runs inside
-  * Engine.session and Bench, and is a no-op for local[*].
+  * Engine.session, and is a no-op for local[*].
   */
 object ClusterConf {
 

@@ -68,10 +68,11 @@ class ApproxSpec extends SparkSpec {
   test("extensions class injects both functions") {
     val exts = new org.apache.spark.sql.SparkSessionExtensions
     new graft.expressions.GraftSparkExtensions().apply(exts)
-    // building a session with these extensions is covered by the SQL
-    // registration test; here we assert the injection itself is wired
-    // (no exception, both identifiers resolvable via a fresh session)
-    graft.expressions.GraftFunctions.register(spark)
-    assert(spark.sql("SELECT portable_hash60('x')").count() === 1L)
+    // the shared session is built with these extensions
+    // (Engine.session), so both identifiers resolve from SQL without
+    // the live registration path
+    assert(spark.sql("SELECT portable_hash60('x'), " +
+      "cosine_f(array(cast(1.0 as float)), array(cast(1.0 as float)))")
+      .count() === 1L)
   }
 }

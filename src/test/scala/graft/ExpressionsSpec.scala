@@ -34,7 +34,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("SQL registration: portable_hash60 and cosine_f callable") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT portable_hash60('abc') AS h, " +
         "cosine_f(array(cast(1.0 as float), cast(0.0 as float)), " +
