@@ -91,10 +91,9 @@ object Bench {
         None
       } finally {
         spark.sparkContext.setJobDescription(null)
-        // release blocks pinned by cache()/localCheckpoint() inside
-        // the query just run (shared helper — safe here because every
-        // query rebuilds from source; see SessionHygiene's contract);
-        // blocking, so unpersist work is never billed to a neighbor
+        // release blocks held by Materialize/cache() inside the query
+        // just run (shared helper); blocking, so unpersist work is
+        // never billed to a neighbor
         graft.tools.SessionHygiene.unpersistAll(spark, blocking = true)
       }
     }

@@ -59,8 +59,9 @@ object BdbBenchmarkRunner {
     *  - read_secs: building the DataFrame graph (catalog lookups,
     *    plan construction — Spark's analogue of the reference's
     *    read-graph step; scans are lazy so this is cheap by design),
-    *  - main_secs: materializing the result via localCheckpoint —
-    *    every scan/shuffle/compute runs here,
+    *  - main_secs: materializing the result via
+    *    [[graft.ops.Materialize]] — every scan/shuffle/compute runs
+    *    here, and its one eager job also yields the row count,
     *  - write_secs: writing the ALREADY-materialized result as
     *    parquet, so the write clock contains no recompute (the
     *    reference's to_parquet step).
@@ -98,8 +99,8 @@ object BdbBenchmarkRunner {
       try {
         val df = fn(spark)
         tRead = System.nanoTime()
-        val mat = df.localCheckpoint() // eager: full compute
-        rows = mat.count() // checkpoint blocks: no recompute
+        val (mat, n) = graft.ops.Materialize.withCount(df)
+        rows = n
         tMain = System.nanoTime()
         mat.write.mode("overwrite").parquet(s"$writeDir/$name")
         tWrite = System.nanoTime()
@@ -107,9 +108,8 @@ object BdbBenchmarkRunner {
         System.err.println(s"[bdb-bench] $name $pass: ${e.getMessage}")
         status = "error"
       } finally {
-        // drop the checkpoint blocks so query N's result doesn't
-        // occupy execution memory during query N+1 (shared helper;
-        // safe — `mat` is fully consumed by the write above)
+        // drop the materialized blocks so query N's result doesn't
+        // occupy execution memory during query N+1 (shared helper)
         graft.tools.SessionHygiene.unpersistAll(spark, blocking = true)
       }
       val end = if (tWrite != 0L) tWrite else System.nanoTime()

@@ -136,7 +136,7 @@ object CoOccur {
     *    ([[pairCounts]], which routes dense↔sparse by slice size) —
     *    id→word decode is a broadcast join on the tiny id table;
     *  - past the bound: [[vocabIds]] (distributed lexicographic id
-    *    assignment, persisted) + [[pairCountsJoin]] (term-keyed id
+    *    assignment, materialized) + [[pairCountsJoin]] (term-keyed id
     *    join into the open-map reducer) — decode joins the SAME
     *    distributed id table, so no word→id or id→word state ever
     *    touches the driver.
@@ -145,29 +145,13 @@ object CoOccur {
     * a code change (previously the caller had to read the
     * [[Guards.boundedCollect]] diagnosis and switch APIs by hand).
     * The distinct+sort+id-assignment pass runs ONCE ([[vocabIds]],
-    * persisted and materialized); the routing probe is a count of
-    * that materialized table — deliberately NOT
-    * `limit(bound+1).count()`, whose global limit funnels up to
-    * bound+1 rows from EVERY upstream partition into a
-    * single-partition exchange exactly when the vocabulary is huge.
-    * On the broadcast route the id table is collected (bounded by
-    * the probe) and UNPERSISTED — nothing stays pinned. On the join
-    * route the persisted id table must outlive this call (the
-    * returned frame is lazy and evaluates it in the pair pass and
-    * both decode joins), so its release is wired to the frame's OWN
-    * lifecycle: a QueryExecutionListener unpersists the id table the
-    * first time any action executes a plan containing the RETURNED
-    * frame — its materialization, wherever the caller triggers it —
-    * then deregisters itself. A long-lived session that loops
-    * this operator past the bound therefore pins nothing between
-    * calls (CoOccurSpec asserts no persistent RDDs survive a drained
-    * join-route query); a result materialized TWICE recomputes the
-    * id table's deterministic lineage on the second pass instead of
-    * pinning it forever — the right trade for the fire-once
-    * analytics shape this serves. Callers needing a different
-    * lifecycle manage it explicitly via the component APIs
-    * ([[vocabIds]]/[[pairCountsJoin]], which hand the caller the
-    * table). All three underlying paths are proven row-for-row
+    * materialized); the routing probe is that materialization's own
+    * count — deliberately NOT `limit(bound+1).count()`, whose global
+    * limit funnels up to bound+1 rows from EVERY upstream partition
+    * into a single-partition exchange exactly when the vocabulary is
+    * huge. On the join route the returned frame reads the
+    * materialized id table in the pair pass and both decode joins.
+    * All three underlying paths are proven row-for-row
     * equal (CoOccurSpec dense ≡ sparse ≡ join, plus the auto-route
     * boundary spec).
     *
@@ -197,7 +181,6 @@ object CoOccur {
     if (routesBroadcast(probed, maxBroadcastVocab)) {
       // bounded by the probe; id order == lexicographic word order
       val words = ids.orderBy("id").collect().map(_.getString(0))
-      ids.unpersist() // the broadcast route pins nothing
       val idRows = words.zipWithIndex
         .map { case (w, i) => Row(w, i) }.toSeq
       val bcIds = spark.createDataFrame(
@@ -206,71 +189,11 @@ object CoOccur {
         pairCounts(docWords, wordsCol, words, minCount, parts,
           maxDenseSlice),
         broadcast(bcIds))
-    } else {
-      val out = decodePairs(
+    } else
+      decodePairs(
         pairCountsJoinV(docWords, docIdCol, wordsCol, ids, minCount,
           parts, knownV = Some(probed)),
         ids)
-      unpersistOnFirstUse(watch = out, release = ids)
-      out
-    }
-  }
-
-  /** Release a persisted frame the first time ANY action executes a
-    * plan containing `watch` — the [[pairCountsAuto]] join route's
-    * lifecycle hook: the id table (`release`) must stay persisted
-    * until the (lazy) result materializes, and the only party who
-    * knows when that happens is the execution itself. A
-    * QueryExecutionListener watches query completions (success OR
-    * failure — a failed materialization must not stay pinned either),
-    * matches the analyzed plan against the RESULT frame's (the cached
-    * subtree survives analysis verbatim; substitution happens later,
-    * at planning), unpersists non-blockingly, and deregisters.
-    *
-    * Watching the RESULT plan, not the id table's, is load-bearing:
-    * the id table was already counted twice before this registration
-    * (vocabIds' eager materialization + the routing probe), and the
-    * listener bus is ASYNCHRONOUS — those completion events can still
-    * be queued when the listener registers, and a listener matching
-    * on the id subtree would consume one of them and release the
-    * table before the result ever ran (recomputing the whole
-    * distinct+sort+zipWithIndex vocab pass per downstream reference —
-    * exactly what the persist exists to prevent). No completed or
-    * in-flight execution contains the freshly-built result plan.
-    *
-    * Asynchrony also means release lands shortly AFTER the action
-    * returns — callers must not assume synchronous release
-    * (CoOccurSpec polls). A result that is NEVER materialized leaves
-    * its listener registered until session close, pinning the two
-    * frames' plans and paying one sameResult tree-compare per later
-    * query completion — the documented cost of the fire-once
-    * convenience API; a workload that builds join-route frames
-    * speculatively and discards them should manage the lifecycle
-    * explicitly via [[vocabIds]]/[[pairCountsJoin]] instead. */
-  private def unpersistOnFirstUse(watch: DataFrame,
-      release: DataFrame): Unit = {
-    val spark = watch.sparkSession
-    val watchPlan = watch.queryExecution.analyzed
-    val lm = spark.listenerManager
-    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-    lazy val listener: org.apache.spark.sql.util.QueryExecutionListener =
-      new org.apache.spark.sql.util.QueryExecutionListener {
-        private def maybeRelease(
-            qe: org.apache.spark.sql.execution.QueryExecution): Unit =
-          if (!done.get() &&
-              qe.analyzed.exists(_.sameResult(watchPlan)) &&
-              done.compareAndSet(false, true)) {
-            release.unpersist(blocking = false)
-            lm.unregister(listener)
-          }
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            durationNs: Long): Unit = maybeRelease(qe)
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            exception: Exception): Unit = maybeRelease(qe)
-      }
-    lm.register(listener)
   }
 
   private val idSchema = StructType(Seq(
@@ -557,20 +480,14 @@ object CoOccur {
     * string-keyed map), so a null here would silently shift every
     * real word's id by one and desync the three paths.
     *
-    * The result is eagerly persisted (MEMORY_AND_DISK) and
-    * materialized: the global distinct+sort+zipWithIndex pipeline
-    * (zipWithIndex alone adds a count job per evaluation) is the
-    * dominant cost at the scales that force this path, and downstream
-    * consumers evaluate the id table more than once
-    * ([[pairCountsJoin]]: a scalar count + the join) — materializing
-    * once makes each re-read a plain scan. persist, NOT
-    * localCheckpoint: this is the beyond-driver-memory path, whose
-    * real deployments are long many-executor jobs where losing an
-    * executor mid-query is routine — localCheckpoint truncates
-    * lineage, so a lost block would kill the query unrecoverably,
-    * while persist recomputes just the lost partitions (the
-    * distinct→sort→zipWithIndex lineage is deterministic, so
-    * recomputed ids are identical).
+    * The result is materialized ([[Materialize]]): the global
+    * distinct+sort+zipWithIndex pipeline (zipWithIndex alone adds a
+    * count job per evaluation) is the dominant cost at the scales
+    * that force this path, and downstream consumers evaluate the id
+    * table more than once ([[pairCountsJoin]]: a scalar count + the
+    * join) — materializing once makes each re-read a plain scan. The
+    * lineage is deterministic, so a recomputed lost block carries
+    * identical ids.
     *
     * @return DataFrame(word STRING, id INT), one row per distinct
     *         non-null input word, materialized.
@@ -580,8 +497,8 @@ object CoOccur {
 
   /** [[vocabIds]] plus the vocabulary size its eager materialization
     * already computed — so callers that need V (the routing probe,
-    * [[pairCountsJoin]]'s id-space bound) don't re-scan the persisted
-    * table with a second count job. */
+    * [[pairCountsJoin]]'s id-space bound) don't re-scan the
+    * materialized table with a second count job. */
   private[graft] def vocabIdsWithCount(vocab: DataFrame,
       wordCol: String): (DataFrame, Long) = {
     val spark = vocab.sparkSession
@@ -597,12 +514,7 @@ object CoOccur {
         "CoOccur.vocabIds: vocabulary exceeds Int.MaxValue entries")
       Row(r.getString(0), i.toInt)
     }
-    val ids = spark.createDataFrame(rdd, StructType(Seq(
-      StructField("word", StringType, nullable = false),
-      StructField("id", IntegerType, nullable = false))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val v = ids.count() // eager: consumers see a materialized table
-    (ids, v)
+    Materialize.withCount(spark.createDataFrame(rdd, idSchema))
   }
 
   /** Pair counting with JOIN-assigned vocab ids — the full

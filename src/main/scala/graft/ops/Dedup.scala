@@ -326,11 +326,12 @@ object Dedup {
     // d04's sf0.1 time at 8 bands). One row per doc with nBands
     // hashes — O(corpus) rows, the natural artifact to persist at
     // any scale.
-    val withH = sigs.select(col(id) +: (0 until nBands).map { b =>
-      val cols = (0 until rowsPerBand)
-        .map(r => col(s"sig_${b * rowsPerBand + r}").cast("string"))
-      md5(concat_ws("#", cols: _*)).as(s"bh_$b")
-    }: _*).localCheckpoint()
+    val withH = Materialize(sigs.select(col(id) +: (0 until nBands).map {
+      b =>
+        val cols = (0 until rowsPerBand)
+          .map(r => col(s"sig_${b * rowsPerBand + r}").cast("string"))
+        md5(concat_ws("#", cols: _*)).as(s"bh_$b")
+    }: _*))
     (0 until nBands).map { j =>
       val noEarlier = (0 until j)
         .map(i => col(s"a.bh_$i") =!= col(s"b.bh_$i"))
@@ -628,9 +629,10 @@ object Dedup {
         // prefix path on portable-hash arrays: the qualifying edge
         // set is order-invariant (AllPairs theorem), so the (df, h)
         // tie-break replaces (df, sh) and no shingle string is built
-        val harr = ngramPortableHashArrays(docTable, id, text, n)
-          .filter(size(col("hs")) > 0)
-          .localCheckpoint() // feeds prefix (df + window) and verify
+        // the array table feeds prefix (df + window) and verify
+        val harr = Materialize(
+          ngramPortableHashArrays(docTable, id, text, n)
+            .filter(size(col("hs")) > 0))
         jaccardVerifyHashArrays(
           prefixFilteredCandidatesHashed(harr, id, tPct), harr, id,
           minJaccardPct = tPct, thresholdPct = tPct)

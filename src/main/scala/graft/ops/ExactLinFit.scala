@@ -119,10 +119,10 @@ object ExactLinFit {
     */
   def fitStats(feats: DataFrame, x1: String, x2: String, x3: String,
       y: String): DataFrame = {
-    val f = feats.select(col(x1).cast("long").as("x1"),
+    // consumed twice: the sums and the scoring pass
+    val f = Materialize(feats.select(col(x1).cast("long").as("x1"),
       col(x2).cast("long").as("x2"), col(x3).cast("long").as("x3"),
-      col(y).cast("long").as("y"))
-      .localCheckpoint() // consumed twice: the sums and the scoring pass
+      col(y).cast("long").as("y")))
     val sums = f.agg(
       expr(sparkMoment(moments.head._1)).as(moments.head._2),
       moments.tail.map { case (e, n) =>

@@ -62,13 +62,12 @@ object ExactLloyd {
     */
   def fitLabels(feats: DataFrame, idCol: String, dims: Seq[String],
       k: Int, iters: Int, unit: Long): DataFrame = {
-    // quantize once; localCheckpoint so the (possibly expensive)
+    // quantize once; materialize so the (possibly expensive)
     // feature aggregation doesn't re-execute for every one of the
     // iters+2 passes below (the x26/a27 multi-consumer pattern)
-    val qv = feats.select(col(idCol).cast("long").as("_id"),
+    val qv = Materialize(feats.select(col(idCol).cast("long").as("_id"),
       array(dims.map(c =>
-        round(col(c).cast("double") * unit, 0).cast("long")): _*).as("qv"))
-      .localCheckpoint()
+        round(col(c).cast("double") * unit, 0).cast("long")): _*).as("qv")))
 
     def collectQv(df: DataFrame): Array[(Long, Array[Long])] =
       df.collect().map(r =>
@@ -105,7 +104,7 @@ object ExactLloyd {
     // (and only matches the oracle's SELECT DISTINCT id ... LIMIT k
     // replay) when ids are unique — enforce it rather than rely on the
     // call sites happening to pass grouped frames. One narrow two-
-    // counter agg over the already-checkpointed frame; k-bounded
+    // counter agg over the already-materialized frame; k-bounded
     // driver state as before.
     val Array(nRows, nIds) = qv
       .agg(count(lit(1)), countDistinct(col("_id"))).collect()(0)
@@ -129,13 +128,13 @@ object ExactLloyd {
     // k-row centroid join + zip_with that RE-derived d2 for the
     // assigned centroid was a second full pass over the corpus
     // (identical long arithmetic, so wssse is bit-identical). The
-    // checkpoint still feeds two consumers (scalar total + labels).
-    val finalAsg = qv.select(col("_id"),
+    // materialized table still feeds two consumers (scalar total +
+    // labels).
+    val finalAsg = Materialize(qv.select(col("_id"),
         graft.expressions.GraftFunctions.argmin_l2_micro_d2(col("qv"),
           typedlit(cents._1.toSeq), typedlit(cents._2.toSeq)).as("_ad"))
       .select(col("_id"), col("_ad").getItem(0).as("cid"),
-        col("_ad").getItem(1).as("d2"))
-      .localCheckpoint()
+        col("_ad").getItem(1).as("d2")))
     val wssse = finalAsg
       .agg(sum(col("d2").cast("decimal(38,0)")).cast("bigint").as("wssse"))
     finalAsg.select(col("_id").as(idCol), col("cid").as("cluster"))

@@ -48,25 +48,24 @@ object KCore {
     * a committed fixpoint for the data (GraphOpsSpec's one-extra-round
     * assertion). A runtime caller at NEW data has no such assertion;
     * `checkEvery = N > 0` inserts a survivors-count probe every N
-    * rounds (localCheckpoint + count — peeling only removes edges, so
-    * an unchanged count IS the fixpoint) and stops early, trading one
-    * materialization per probe window for a convergence signal and a
-    * bound on wasted rounds. */
+    * rounds (one [[Materialize.withCount]] — peeling only removes
+    * edges, so an unchanged count IS the fixpoint) and stops early,
+    * trading one materialization per probe window for a convergence
+    * signal and a bound on wasted rounds. */
   def peel(edges: DataFrame, k: Int, rounds: Int,
       checkEvery: Int = 0): DataFrame =
     if (checkEvery <= 0) {
       (1 to rounds).foldLeft(edges)((e, _) => peelRound(e, k))
     } else {
-      var e = edges.localCheckpoint()
-      var last = e.count()
+      var (e, last) = Materialize.withCount(edges)
       var done = last == 0L
       var r = 0
       while (r < rounds && !done) {
         val step = math.min(checkEvery, rounds - r)
-        e = (1 to step).foldLeft(e)((acc, _) => peelRound(acc, k))
-          .localCheckpoint()
+        val (next, n) = Materialize.withCount(
+          (1 to step).foldLeft(e)((acc, _) => peelRound(acc, k)))
+        e = next
         r += step
-        val n = e.count()
         done = n == last || n == 0L
         last = n
       }

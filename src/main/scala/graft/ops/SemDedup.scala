@@ -228,23 +228,23 @@ object SemDedup {
     * each iteration re-assigns by cosine ([[assignCosJoin]]) and
     * recomputes per-cluster element-wise means via one posexplode +
     * two keyed aggregations (k*dim rows after partials). Centroids
-    * are localCheckpoint()ed per round (double-consumed next round)
-    * but NEVER collected. Empty clusters drop out, as in standard
+    * are materialized per round (double-consumed next round) but
+    * NEVER collected; every round's blocks stay held until the
+    * result is dropped ([[Materialize]]). Empty clusters drop out, as in standard
     * Lloyd. */
   def lloydCentroids(e: DataFrame, k: Int, iters: Int): DataFrame = {
-    var cents = e.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(k)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      .localCheckpoint()
+    var cents = Materialize(
+      e.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(k)
+        .select(col("vec_id").as("cid"), col("embedding").as("cvec")))
     var i = 0
     while (i < iters) {
-      cents = assignCosJoin(e, cents)
+      cents = Materialize(assignCosJoin(e, cents)
         .select(col("cid"), posexplode(col("embedding")).as(Seq("pos", "x")))
         .groupBy("cid", "pos").agg(avg(col("x").cast("double")).as("m"))
         .groupBy("cid")
         .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
         .select(col("cid"),
-          expr("transform(pm, p -> CAST(p.m AS FLOAT))").as("cvec"))
-        .localCheckpoint()
+          expr("transform(pm, p -> CAST(p.m AS FLOAT))").as("cvec")))
       i += 1
     }
     cents

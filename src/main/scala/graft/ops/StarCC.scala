@@ -79,18 +79,19 @@ object StarCC {
     if (dedup) out.distinct() else out
   }
 
+  /** Materialization cadence of a deep [[components]] run. */
+  private val MaterializeEvery = 4
+
   /** `rounds` alternations of large+small star. Every stage consumes
     * its input exactly once (one-pass symmetrize, window aggregates,
     * one-pass star emission), so the whole iteration is ONE linear
     * pipeline and runs as a single job — no per-round
     * materialization, whose fixed cost dominated at small scale (the
-    * checkpointed form measured 2× slower at sf0.1). Lineage depth
-    * and optimizer time still grow with round count, so the DEFAULT
-    * (`checkpointEvery = -1`) auto-checkpoints every 4 alternations
-    * once `rounds` exceeds 4 — a short run keeps the pure linear
-    * pipeline, a deep run bounds plan depth and failure-recovery
-    * re-execution. Pass 0 to force no checkpointing, or an explicit
-    * positive cadence to override.
+    * checkpointed form measured 2× slower at sf0.1). Plan depth and
+    * optimizer time still grow with round count, so once `rounds`
+    * exceeds [[MaterializeEvery]] the edges are materialized every
+    * [[MaterializeEvery]] alternations — a short run keeps the pure
+    * linear pipeline, a deep run bounds the plan depth.
     *
     * Skew caveat of the window form: the per-node neighborhood min is
     * a window aggregate over `partitionBy(u)`, which has NO map-side
@@ -105,14 +106,9 @@ object StarCC {
     * vertex set with root=self for isolated nodes.
     */
   def components(edges: DataFrame, rounds: Int,
-      checkpointEvery: Int = -1,
       distinctInput: Boolean = true,
       dedupEvery: Int = 1): DataFrame = {
     require(dedupEvery >= 1, s"dedupEvery must be >= 1: $dedupEvery")
-    val ckpt =
-      if (checkpointEvery >= 0) checkpointEvery
-      else if (rounds > 4) 4
-      else 0
     // callers whose edge stream is distinct by construction (a
     // groupBy-keyed pair aggregate, like d12's) pass
     // distinctInput = false and skip one exchange of the FULL edge
@@ -133,8 +129,9 @@ object StarCC {
     for (r <- 1 to rounds) {
       e = smallStar(largeStar(e),
         dedup = r < rounds && r % dedupEvery == 0)
-      if (ckpt > 0 && r % ckpt == 0 && r < rounds)
-        e = e.localCheckpoint()
+      if (rounds > MaterializeEvery && r % MaterializeEvery == 0 &&
+          r < rounds)
+        e = Materialize(e)
     }
     // converged edges are (child, root); a node can still appear on
     // both sides mid-convergence, so take the min root per node

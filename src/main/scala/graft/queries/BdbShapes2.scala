@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ops.{Exact, Sessionize, Text}
+import graft.ops.{Exact, Materialize, Sessionize, Text}
 import graft.ops.Exact._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -213,16 +213,15 @@ object BdbShapes2 extends Suite {
     // MlPipelines.logregMllib; ref: bdb_tools/q05_utils.py:75-120).
     Q("b05_click_clf", (s, d) => {
       // materialize the per-user feature table once — train stats and
-      // held-out scoring both consume it, and without the checkpoint
+      // held-out scoring both consume it, and without materializing
       // each branch re-runs the clickstream aggregation (the same
       // feature-table materialization the reference does before its
       // fit, q05_utils.py)
-      val f = ev(s, d).groupBy("user_id").agg(
+      val f = Materialize(ev(s, d).groupBy("user_id").agg(
         sum(when(col("event_type") === "click", 1).otherwise(0))
           .cast("bigint").as("x"),
         when(sum(when(col("event_type") === "purchase", 1).otherwise(0)) > 0,
-          1.0).otherwise(0.0).as("y"))
-        .localCheckpoint()
+          1.0).otherwise(0.0).as("y")))
       val train = f.filter(pmod(col("user_id"), lit(10)) =!= 0)
       val test = f.filter(pmod(col("user_id"), lit(10)) === 0)
       val st = train.agg(

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ops.{Bloom, Cms, CmsAgg, Dedup, Pack, Split, Text}
+import graft.ops.{Bloom, Cms, CmsAgg, Dedup, Materialize, Pack, Split, Text}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -270,10 +270,10 @@ object CurationQueries extends Suite {
       // pre-aggregation (k-compressed join) just adds an exchange on
       // corpora without repeated per-doc bigrams (measured +1.4 s at
       // engine sf1, where occurrences/distinct = 1.17).
-      val bi = Dedup.ngrams(base, "doc_id", "text", 2)
+      // feeds the bigram count AND the join probe
+      val bi = Materialize(Dedup.ngrams(base, "doc_id", "text", 2)
         .select(col("doc_id"), xxhash64(col("sh")).as("h"),
-          xxhash64(substring_index(col("sh"), " ", 1)).as("w1h"))
-        .localCheckpoint() // feeds the bigram count AND the join probe
+          xxhash64(substring_index(col("sh"), " ", 1)).as("w1h")))
       val biCount = bi.groupBy("h").agg(count(lit(1)).as("c2"))
       bi.join(biCount, "h")
         .join(uniH, "w1h") // vocabulary-sized, broadcast by Catalyst
@@ -865,11 +865,11 @@ object CurationQueries extends Suite {
     // narrow length scan into a keyed aggregate with map-side
     // partials.
     Q("a27_source_drift", (s, d) => {
-      val b = docs(s, d).select(col("source"),
+      // feeds corpus bands + per-source rollup
+      val b = Materialize(docs(s, d).select(col("source"),
         least(expr("size(filter(split(text, ' '), w -> w != '')) div 100"),
           lit(9L)).as("band"))
-        .groupBy("source", "band").agg(count(lit(1)).as("n_sb"))
-        .localCheckpoint() // feeds corpus bands + per-source rollup
+        .groupBy("source", "band").agg(count(lit(1)).as("n_sb")))
       val corp = b.groupBy("band").agg(sum("n_sb").as("n_b"))
         .crossJoin(broadcast(
           b.agg(sum("n_sb").as("n"))))
@@ -918,13 +918,13 @@ object CurationQueries extends Suite {
     // size). All integer floor division; epochs_ppm = alloc/tokens
     // shows the sampling pressure per source.
     Q("a28_capped_mixture", (s, d) => {
-      val ps = docs(s, d).select(col("source"),
+      // 20-row frame; feeds three total splices
+      val ps = Materialize(docs(s, d).select(col("source"),
           expr("size(filter(split(text, ' '), w -> w != ''))")
             .cast("long").as("dl"))
         .groupBy("source").agg(sum("dl").as("tokens"))
         .withColumn("w",
-          floor(sqrt(col("tokens").cast("double"))).cast("long"))
-        .localCheckpoint() // 20-row frame; feeds three total splices
+          floor(sqrt(col("tokens").cast("double"))).cast("long")))
       val t0 = ps.agg(sum("tokens").as("tt"), sum("w").as("sw"))
       val r1 = ps.crossJoin(broadcast(t0))
         .withColumn("b", expr("tt div 2"))
@@ -1077,13 +1077,13 @@ object CurationQueries extends Suite {
     Q("a25_quality_probe", (s, d) => {
       import s.implicits._
       // integer label: stop_ratio < 0.2  <=>  5 * n_stop < n_words
-      val f = docs(s, d).select(
+      // feeds the training aggregate AND scoring
+      val f = Materialize(docs(s, d).select(
         size(split(col("text"), " ")).cast("long").as("x1"),
         Text.markerCount(col("text"), "the").as("ns"))
         .select(col("x1"), expr("ns * 1000000 div x1").as("x2"),
           when(col("x1").between(30, 1000) &&
-            col("ns") * 5 < col("x1"), 1L).otherwise(0L).as("y"))
-        .localCheckpoint() // feeds the training aggregate AND scoring
+            col("ns") * 5 < col("x1"), 1L).otherwise(0L).as("y")))
       val r = f.agg(
         count(lit(1)).as("n"), sum("x1").as("sx1"), sum("x2").as("sx2"),
         sum(col("x1") * col("x1")).as("sx11"),

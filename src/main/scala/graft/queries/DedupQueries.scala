@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ops.{Dedup, ScalarQuant, Similarity, Text}
+import graft.ops.{Dedup, Materialize, ScalarQuant, Similarity, Text}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -192,9 +192,9 @@ object DedupQueries extends Suite {
       // strings, one md5 per shingle TOTAL, and the signature agg /
       // hashed-set collect_list / size groupBy exchanges all
       // disappear (each was a full pass over the exploded stream).
-      val harr = Dedup.ngramPortableHashArrays(base, "doc_id", "text", 3)
-        .filter(size(col("hs")) > 0) // mirror the exploded form's absence
-        .localCheckpoint()
+      val harr = Materialize(
+        Dedup.ngramPortableHashArrays(base, "doc_id", "text", 3)
+          .filter(size(col("hs")) > 0)) // mirror the exploded form's absence
       val sigs = (0 until K).foldLeft(
         harr.select(col("doc_id"), graft.expressions.GraftFunctions
           .minhash_sigs(col("hs"), K).as("sigs"))) { (df, i) =>
@@ -318,14 +318,13 @@ object DedupQueries extends Suite {
       // the 2.7M-row word explode; values are identical (spec).
       // Zero-word docs are filtered to mirror their absence from the
       // exploded groupBy.
-      val fp = docs(s, d)
+      val fp = Materialize(docs(s, d)
         .filter(col("doc_id") < SimBits32CorpusCap)
         .select(col("doc_id"), filter(split(col("text"), " "),
           w => length(w) > 0).as("__w"))
         .filter(size(col("__w")) > 0)
         .select(col("doc_id"), graft.expressions.GraftFunctions
-          .simhash_fp(col("__w"), SmallCorpusSimBits).as("simhash"))
-        .localCheckpoint()
+          .simhash_fp(col("__w"), SmallCorpusSimBits).as("simhash")))
       Dedup.simhashPairsBanded(fp, "doc_id", 6, SmallCorpusSimBits)
         .orderBy("id_1", "id_2")
     },
@@ -363,13 +362,12 @@ object DedupQueries extends Suite {
     // Width stays the scale knob: a 10^9-doc corpus raises it again
     // (two-long 128-bit fps, same construction).
     Q("d39_simhash60_neardup", (s, d) => {
-      val fp = docs(s, d)
+      val fp = Materialize(docs(s, d)
         .select(col("doc_id"), filter(split(col("text"), " "),
           w => length(w) > 0).as("__w"))
         .filter(size(col("__w")) > 0)
         .select(col("doc_id"), graft.expressions.GraftFunctions
-          .simhash_fp(col("__w")).as("simhash"))  // default width = 60
-        .localCheckpoint()
+          .simhash_fp(col("__w")).as("simhash"))) // default width = 60
       Dedup.simhashPairsBanded(fp, "doc_id", 6)
         .orderBy("id_1", "id_2")
     },
@@ -401,7 +399,7 @@ object DedupQueries extends Suite {
     // word bit-identical to the 60-bit fingerprint), same banding
     // operator shape, same exactness guarantee.
     Q("d40_simhash120_neardup", (s, d) => {
-      val fp = docs(s, d)
+      val fp = Materialize(docs(s, d)
         .select(col("doc_id"), filter(split(col("text"), " "),
           w => length(w) > 0).as("__w"))
         .filter(size(col("__w")) > 0)
@@ -409,8 +407,7 @@ object DedupQueries extends Suite {
           .simhash_fp2(col("__w")).as("fp2"))
         .select(col("doc_id"),
           col("fp2").getItem(0).as("simhash_lo"),
-          col("fp2").getItem(1).as("simhash_hi"))
-        .localCheckpoint()
+          col("fp2").getItem(1).as("simhash_hi")))
       Dedup.simhashPairsBanded2(fp, "doc_id", 6)
         .orderBy("id_1", "id_2")
     },
@@ -678,8 +675,7 @@ object DedupQueries extends Suite {
       // (d29's discipline), where only each doc's rarest shingles
       // enter buckets. The star rounds are one linear pipeline (every
       // stage single-consumer), so the whole query is one job with no
-      // materialization barrier; at cluster scale pass checkpointEvery
-      // to bound recovery depth.
+      // materialization barrier.
       val base = docs(s, d)
       val edges = Dedup.dupEdges(base, "doc_id", "text", 3, tPct = 10)
       // edges are distinct by construction (pair-keyed aggregate);
@@ -758,11 +754,10 @@ object DedupQueries extends Suite {
     // after banding is not optional at 0.9 thresholds).
     Q("d21_minhash_est", (s, d) => {
       val base = docs(s, d).filter(col("doc_id") < 1000)
-      val sh = Dedup.ngramShingles(base, "doc_id", "text", 3)
-        .localCheckpoint()
+      val sh = Materialize(Dedup.ngramShingles(base, "doc_id", "text", 3))
       // four consumers (bands self-join x2, est join x2) — one row
       // per doc, materialize instead of recomputing the 64-min agg
-      val sigs = Dedup.minhashSignatures(sh, "doc_id", K).localCheckpoint()
+      val sigs = Materialize(Dedup.minhashSignatures(sh, "doc_id", K))
       val cands = Dedup.lshCandidates(
         Dedup.lshBands(sigs, "doc_id", K, RowsPerBand), "doc_id")
       val nMatch = (0 until K).map(i =>
@@ -1042,10 +1037,9 @@ object DedupQueries extends Suite {
       // through every prefix exchange; the (df, h) prefix order is
       // internal (the oracle is the brute-force join, and AllPairs
       // is exact under any total order)
-      val harr = Dedup.ngramPortableHashArrays(docs(s, d), "doc_id",
-          "text", 3)
-        .filter(size(col("hs")) > 0)
-        .localCheckpoint()
+      val harr = Materialize(
+        Dedup.ngramPortableHashArrays(docs(s, d), "doc_id", "text", 3)
+          .filter(size(col("hs")) > 0))
       val cands = Dedup.prefixFilteredCandidatesHashed(harr, "doc_id", 80)
       Dedup.jaccardVerifyHashArrays(cands, harr, "doc_id",
           minJaccardPct = 80)
@@ -1096,11 +1090,10 @@ object DedupQueries extends Suite {
       // the chunk table feeds BOTH the dup-fp aggregate and the
       // per-doc join — materialize once (d12 discipline) or the
       // whole window+fingerprint pipeline executes twice
-      val chunks = g.groupBy("doc_id", "chunk_id")
+      val chunks = Materialize(g.groupBy("doc_id", "chunk_id")
         .agg(md5(concat_ws(" ",
           expr("transform(sort_array(collect_list(struct(pos, word))), x -> x.word)")))
-          .as("fp"))
-        .localCheckpoint()
+          .as("fp")))
       val dupFp = chunks.groupBy("fp")
         .agg(countDistinct("doc_id").as("nd"))
         .filter(col("nd") >= 2).select("fp")
@@ -1229,14 +1222,13 @@ object DedupQueries extends Suite {
       // the exploded stream now feeds only the recenter joins, the
       // seed collect and the 10-query LUT — assignment/encode never
       // touches it (see assignCb)
-      val eq = embs(s, d)
+      val eq = Materialize(embs(s, d)
         .select(col("vec_id"), posexplode(col("embedding")))
         .toDF("vec_id", "pos", "x")
         .select(col("vec_id"),
           (col("pos") / 8).cast("int").as("s"),
           (col("pos") % 8).cast("int").as("j"),
-          floor(col("x").cast("double") * 1000000).cast("long").as("v"))
-        .localCheckpoint()
+          floor(col("x").cast("double") * 1000000).cast("long").as("v")))
       // Per-iteration codebook COLLECT (<= M*K*SubDim = 1024 values —
       // the m02/MLlib loop): assignment/encode is then ONE narrow
       // kernel pass (pq_encode_cb) per stage instead of an n*K-row
@@ -1680,8 +1672,8 @@ object DedupQueries extends Suite {
       // roots is dup-membership-bounded (tiny next to the corpus) and
       // feeds two consumers below — pin it so the whole edge+star
       // pipeline runs once
-      val roots = graft.ops.StarCC.components(edges, rounds = 4,
-        distinctInput = false, dedupEvery = 2).localCheckpoint()
+      val roots = Materialize(graft.ops.StarCC.components(edges, rounds = 4,
+        distinctInput = false, dedupEvery = 2))
       // group sizes from roots alone (StarCC.groupSizes — self-
       // consistent with the coalesce labeling for ANY star output,
       // proven against the window form on non-converged tables in

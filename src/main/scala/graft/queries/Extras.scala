@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ops.Multimodal
+import graft.ops.{Materialize, Multimodal}
 import graft.streaming.StreamingSessionize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -242,8 +242,8 @@ object Extras extends Suite {
       val media = Multimodal.asBinary(
         Tables.load(s, d, "documents").filter(col("doc_id") < 200),
         "doc_id", "text", "video")
-      val video = Multimodal.decodeVideoAvi(media, "doc_id")
-        .localCheckpoint() // 200 rows, consumed by frames + dims below
+      // 200 rows, consumed by frames + dims below
+      val video = Materialize(Multimodal.decodeVideoAvi(media, "doc_id"))
       Multimodal.sampledFrames(video, "doc_id", 2)
         .join(broadcast(video.select("doc_id", "fps", "duration_ms",
           "width", "height", "n_total_frames")), "doc_id")
@@ -819,19 +819,19 @@ object Extras extends Suite {
     // candidates, no all-pairs join), so the 100 TB story is the
     // measured d39 one — decode-dominated and ~linear (slope rows).
     Q("x29_media_neardup", (s, d) => {
-      val media = Multimodal.asBinary(
+      // feeds the decode AND the md5 arm
+      val media = Materialize(Multimodal.asBinary(
         Tables.load(s, d, "documents"),
         "doc_id", "text", "video")
         // spread the single-file scan for the CPU-bound decode
         // (explicit count — AQE would coalesce a tiny-bytes stage)
-        .transform(Multimodal.decodeParallel(_, "doc_id"))
-        .localCheckpoint() // feeds the decode AND the md5 arm
+        .transform(Multimodal.decodeParallel(_, "doc_id")))
       val md = media.select(col("doc_id"), md5(col("content")).as("m"))
-      val fp = Multimodal.decodeVideoFrameTokens(media, "doc_id")
+      // corpus-sized, both sides of the band join
+      val fp = Materialize(Multimodal.decodeVideoFrameTokens(media, "doc_id")
         .select(col("doc_id"),
           graft.expressions.GraftFunctions.simhash_fp(col("frame_tokens"))
-            .as("simhash")) // default width = 60, the d39 scale form
-        .localCheckpoint() // corpus-sized, both sides of the band join
+            .as("simhash"))) // default width = 60, the d39 scale form
       graft.ops.Dedup.simhashPairsBanded(fp, "doc_id", 6)
         .join(md.select(col("doc_id").as("id_1"), col("m").as("m1")),
           "id_1")
@@ -892,17 +892,16 @@ object Extras extends Suite {
     // x31 image): the operator surface a media curation pipeline
     // dedupes with.
     Q("x30_audio_neardup", (s, d) => {
-      val media = Multimodal.asBinary(
+      val media = Materialize(Multimodal.asBinary(
         Tables.load(s, d, "documents"),
         "doc_id", "text", "audio")
-        .transform(Multimodal.decodeParallel(_, "doc_id")) // see x29
-        .localCheckpoint()
+        .transform(Multimodal.decodeParallel(_, "doc_id"))) // see x29
       val md = media.select(col("doc_id"), md5(col("content")).as("m"))
-      val fp = Multimodal.decodeAudioWindowTokens(media, "doc_id")
-        .select(col("doc_id"),
-          graft.expressions.GraftFunctions.simhash_fp(col("window_tokens"))
-            .as("simhash"))
-        .localCheckpoint()
+      val fp = Materialize(
+        Multimodal.decodeAudioWindowTokens(media, "doc_id")
+          .select(col("doc_id"),
+            graft.expressions.GraftFunctions.simhash_fp(col("window_tokens"))
+              .as("simhash")))
       graft.ops.Dedup.simhashPairsBanded(fp, "doc_id", 6)
         .join(md.select(col("doc_id").as("id_1"), col("m").as("m1")),
           "id_1")
@@ -955,16 +954,14 @@ object Extras extends Suite {
     // (not capped like the video/audio arms), so this is also the
     // arm with a data-scaled slope row.
     Q("x31_image_neardup", (s, d) => {
-      val media = Multimodal.asBinary(
+      val media = Materialize(Multimodal.asBinary(
         Tables.load(s, d, "documents"), "doc_id", "text", "image")
-        .transform(Multimodal.decodeParallel(_, "doc_id")) // see x29
-        .localCheckpoint()
+        .transform(Multimodal.decodeParallel(_, "doc_id"))) // see x29
       val md = media.select(col("doc_id"), md5(col("content")).as("m"))
-      val fp = Multimodal.decodeImageTileTokens(media, "doc_id")
+      val fp = Materialize(Multimodal.decodeImageTileTokens(media, "doc_id")
         .select(col("doc_id"),
           graft.expressions.GraftFunctions.simhash_fp(col("tile_tokens"))
-            .as("simhash"))
-        .localCheckpoint()
+            .as("simhash")))
       graft.ops.Dedup.simhashPairsBanded(fp, "doc_id", 6)
         .join(md.select(col("doc_id").as("id_1"), col("m").as("m1")),
           "id_1")
@@ -1287,12 +1284,11 @@ object Extras extends Suite {
         .select(col("doc_id"),
           explode(winnow_keys(col("__w"), K, W)).as("selkey"))
         .select(col("doc_id"), substring(col("selkey"), 1, 32).as("fp"))
-      // localCheckpoint: pins the drained sink for its two consumers
+      // materialized: holds the drained sink for its two consumers
       // AND gives the self-join fresh attribute ids (a MemoryPlan
       // view reused on both sides of a join fails resolution)
-      val sel = graft.streaming.StreamConf
-        .runToTable(s, stream, "graft_stream_winnow", "append")
-        .localCheckpoint()
+      val sel = Materialize(graft.streaming.StreamConf
+        .runToTable(s, stream, "graft_stream_winnow", "append"))
       val dup = sel.groupBy("fp")
         .agg(countDistinct("doc_id").as("nd"))
         .filter(col("nd") >= 2).select("fp")
@@ -1427,7 +1423,7 @@ object Extras extends Suite {
       // DeduplicateRelations cannot re-instance a MemoryPlan, so the
       // self-joins below hit INTERNAL_ERROR (conflicting attributes)
       // without this — same pattern as x26 and batch a27.
-      val b = spark.table("graft_stream_drift").localCheckpoint()
+      val b = Materialize(spark.table("graft_stream_drift"))
       val corp = b.groupBy("band").agg(sum("n_sb").as("n_b"))
         .crossJoin(broadcast(b.agg(sum("n_sb").as("n"))))
         .select(col("band"), expr("(n_b * 1000000) div n").as("exp_ppm"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ops.Dedup
+import graft.ops.{Dedup, Materialize}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: each iteration is one edge-rank equi-join + one
   * groupBy(dst) — both keyed on node, so the partitioning is reused
-  * across iterations; on a real cluster checkpoint every few rounds
-  * to flatten lineage (see d12 note in SCALE.md).
+  * across iterations; on a real cluster materialize every few rounds
+  * to bound plan depth (see d12 note in SCALE.md).
   */
 object GraphQueries extends Suite {
 
@@ -39,20 +39,19 @@ object GraphQueries extends Suite {
         .select(graft.expressions.ArrayPairs.array_pairs(col("_brands"))
           .as(Seq("src", "dst")))
       // the edge list feeds all 5 iterations plus the node table —
-      // materialize ONCE (d12's localCheckpoint discipline) so each
-      // iteration joins a flat in-memory table instead of re-running
-      // the lineitem⋈part pair generation; at 100 TB the 5x scan
+      // materialize ONCE so each iteration joins a flat in-memory
+      // table instead of re-running the lineitem⋈part pair
+      // generation; at 100 TB the 5x scan
       // re-execution is the real cost. The (iteration-invariant)
       // out-degree is folded onto each edge row by a window COUNT
       // over the same src key — one exchange, no separate degree
-      // aggregate + join-back, and no second checkpoint (the previous
-      // two-checkpoint form paid a full extra materialization job)
-      val edges = e0.select("src", "dst")
+      // aggregate + join-back, and no second materialization (the
+      // previous two-barrier form paid a full extra job)
+      val edges = Materialize(e0.select("src", "dst")
         .unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
         .distinct()
         .withColumn("deg", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("src")))
-        .localCheckpoint()
+          org.apache.spark.sql.expressions.Window.partitionBy("src"))))
       val nodes = edges.select("src").distinct()
       // driver-side scalar splice (o29 pattern): node count feeds the
       // integer base constants

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ops.{Exact, Text}
+import graft.ops.{Exact, Materialize, Text}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -476,9 +476,9 @@ object MlQueries extends Suite {
     Q("m05_multiclass_metrics", (s, d) => {
       // the confusion matrix feeds BOTH the per-true and per-pred
       // aggregations — materialize the (langs x langs)-row result
-      // once (d12's localCheckpoint discipline) instead of running
-      // the whole NB train+score pipeline on each branch
-      val conf = nbConfusion(s, d).localCheckpoint()
+      // once instead of running the whole NB train+score pipeline on
+      // each branch
+      val conf = Materialize(nbConfusion(s, d))
       val tr = conf.groupBy(col("true_lang").as("lang"))
         .agg(sum("n").as("n_true"),
           sum(when(col("true_lang") === col("pred_lang"), col("n"))

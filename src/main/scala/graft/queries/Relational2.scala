@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.ops.Exact._
+import graft.ops.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -213,7 +214,8 @@ object Relational2 extends Suite {
       val li = t(s, d, "lineitem")
       // one aggregate pass serves the quantity percentiles AND the
       // price order-statistic positions
-      val qtyP = li.groupBy("l_returnflag")
+      // feeds stats/ranks/p99 AND the final select
+      val qtyP = Materialize(li.groupBy("l_returnflag")
         .agg(
           round(expr("percentile(l_quantity, 0.5)"), 6).as("p50"),
           round(expr("percentile(l_quantity, 0.9)"), 6).as("p90"),
@@ -223,8 +225,7 @@ object Relational2 extends Suite {
           // lineitem (4 full scans -> 3; guide §2.3 "aggregate before
           // you shuffle" applied to the operator's setup pass)
           min(col("l_extendedprice")).cast("double").as("_lo"),
-          max(col("l_extendedprice")).cast("double").as("_hi"))
-        .localCheckpoint() // feeds stats/ranks/p99 AND the final select
+          max(col("l_extendedprice")).cast("double").as("_hi")))
       val stats = qtyP.select(col("l_returnflag"), col("n"))
         .withColumn("pos", lit(0.99) * (col("n") - 1).cast("double"))
         .withColumn("lo", floor(col("pos")).cast("long"))

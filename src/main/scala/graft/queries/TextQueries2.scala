@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ops.{Exact, Text}
+import graft.ops.{Exact, Materialize, Text}
 import graft.expressions.SentenceWords.sentence_words
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -330,12 +330,11 @@ object TextQueries2 extends Suite {
     Q("t21_pmi_cooccur", (s, d) => {
       import s.implicits._
       // Per-doc distinct words stay NARROW (array_distinct behind the
-      // split — no corpus-wide distinct exchange); checkpointed once
+      // split — no corpus-wide distinct exchange); materialized once
       // for its two consumers (df counts + the pair pass).
-      val wd = docs(s, d).select(col("doc_id"),
+      val wd = Materialize(docs(s, d).select(col("doc_id"),
         expr("array_distinct(filter(split(text, ' '), w -> w != ''))")
-          .as("ws"))
-        .localCheckpoint()
+          .as("ws")))
       val cx = wd.select(explode(col("ws")).as("word"))
         .groupBy("word").agg(count(lit(1)).as("c"))
       // Apriori prune: c_xy <= min(c_x, c_y), so a pair surviving
@@ -405,10 +404,9 @@ object TextQueries2 extends Suite {
     // Looser cuts than t21 (df/c_xy >= 10) so the two gates pin
     // different result sets.
     Q("t32_pmi_bigvocab_join", (s, d) => {
-      val wd = docs(s, d).select(col("doc_id"),
+      val wd = Materialize(docs(s, d).select(col("doc_id"),
         expr("array_distinct(filter(split(text, ' '), w -> w != ''))")
-          .as("ws"))
-        .localCheckpoint()
+          .as("ws")))
       val cx = wd.select(explode(col("ws")).as("word"))
         .groupBy("word").agg(count(lit(1)).as("c"))
       // apriori: c_xy <= min(c_x, c_y), so the df>=10 vocabulary is
@@ -491,7 +489,8 @@ object TextQueries2 extends Suite {
     Q("t23_passage_dedup", (s, d) => {
       // narrow passage build — see d28's note (same fp values as the
       // exploded collect_list groupBy, no 2.9M-row exchange)
-      val passages = docs(s, d)
+      // feeds the dup aggregate AND the final join
+      val passages = Materialize(docs(s, d)
         .select(col("doc_id"), filter(split(col("text"), " "),
           x => length(x) > 0).as("__w"))
         .filter(size(col("__w")) > 0)
@@ -499,8 +498,7 @@ object TextQueries2 extends Suite {
           """transform(sequence(0, (size(__w) - 1) div 10),
             |  i -> md5(concat_ws(' ', slice(__w, i * 10 + 1, 10))))"""
             .stripMargin)))
-        .toDF("doc_id", "wid", "fp")
-        .localCheckpoint() // feeds the dup aggregate AND the final join
+        .toDF("doc_id", "wid", "fp"))
       val dupFp = passages.groupBy("fp")
         .agg(countDistinct("doc_id").as("nd"))
         .filter(col("nd") >= 2).select("fp")
@@ -554,7 +552,8 @@ object TextQueries2 extends Suite {
       // the old wordsWithPos explode + (doc, wid) collect_list
       // groupBy, without its 2.9M-row exchange — the passage stream
       // starts at ~290k rows)
-      val passages = docs(s, d)
+      // feeds the dup aggregate AND the run scan
+      val passages = Materialize(docs(s, d)
         .select(col("doc_id"), filter(split(col("text"), " "),
           x => length(x) > 0).as("__w"))
         .filter(size(col("__w")) > 0)
@@ -562,8 +561,7 @@ object TextQueries2 extends Suite {
           """transform(sequence(0, (size(__w) - 1) div 10),
             |  i -> md5(concat_ws(' ', slice(__w, i * 10 + 1, 10))))"""
             .stripMargin)))
-        .toDF("doc_id", "wid", "fp")
-        .localCheckpoint() // feeds the dup aggregate AND the run scan
+        .toDF("doc_id", "wid", "fp"))
       val dupFp = passages.groupBy("fp")
         .agg(countDistinct("doc_id").as("nd"))
         .filter(col("nd") >= 2).select("fp")
@@ -636,11 +634,11 @@ object TextQueries2 extends Suite {
     // consecutive-match run) — two independent formulations of the
     // same contract, reconciled by the hash gate.
     Q("t25_bpe_merges", (s, d) => {
-      val vocab = Text.words(docs(s, d), "doc_id", "text")
+      // tiny (|vocab| rows); feeds both iterations
+      val vocab = Materialize(Text.words(docs(s, d), "doc_id", "text")
         .groupBy("word").agg(count(lit(1)).as("cnt"))
         .withColumn("syms", split(col("word"), ""))
-        .select("word", "cnt", "syms")
-        .localCheckpoint() // tiny (|vocab| rows); feeds both iterations
+        .select("word", "cnt", "syms"))
 
       def pairCounts(v: DataFrame): DataFrame =
         v.select(col("cnt"),
@@ -659,7 +657,7 @@ object TextQueries2 extends Suite {
           .select(lit(it).as("it"), col("rnk"), col("pr"), col("pcnt"))
       }
 
-      val pc1 = pairCounts(vocab).localCheckpoint()
+      val pc1 = Materialize(pairCounts(vocab))
       val b1 = pc1.orderBy(desc("pcnt"), asc("pr")).limit(1)
         .select(substring_index(col("pr"), " ", 1).as("mx"),
           substring_index(col("pr"), " ", -1).as("my"))
@@ -746,9 +744,9 @@ object TextQueries2 extends Suite {
     // with the islands-window formulation, twice.
     Q("t26_bpe_encode", (s, d) => {
       val w = Text.words(docs(s, d), "doc_id", "text")
-      val vocab = w.groupBy("word").agg(count(lit(1)).as("cnt"))
-        .withColumn("syms", split(col("word"), ""))
-        .localCheckpoint()
+      val vocab = Materialize(
+        w.groupBy("word").agg(count(lit(1)).as("cnt"))
+          .withColumn("syms", split(col("word"), "")))
 
       def pairCounts(v: DataFrame): DataFrame =
         v.select(col("cnt"), explode(expr(
@@ -773,7 +771,7 @@ object TextQueries2 extends Suite {
                |    ELSE concat(acc, array(c)) END)""".stripMargin))
           .select("word", "cnt", "syms")
 
-      val v1 = applyMerge(vocab, best(pairCounts(vocab))).localCheckpoint()
+      val v1 = Materialize(applyMerge(vocab, best(pairCounts(vocab))))
       val v2 = applyMerge(v1, best(pairCounts(v1)))
       // encode-back as ONE narrow scan: the trained vocab's per-word
       // BPE symbol count is vocabulary-sized by construction, so it
@@ -972,14 +970,14 @@ object TextQueries2 extends Suite {
     Q("d34_winnow_dedup", (s, d) => {
       import graft.expressions.GraftFunctions.winnow_keys
       val K = 5; val W = 8
-      val sel = docs(s, d)
+      // feeds the dup aggregate AND the doc rollup
+      val sel = Materialize(docs(s, d)
         .select(col("doc_id"), filter(split(col("text"), " "),
           x => length(x) > 0).as("__w"))
         .filter(size(col("__w")) >= K)
         .select(col("doc_id"),
           explode(winnow_keys(col("__w"), K, W)).as("selkey"))
-        .select(col("doc_id"), substring(col("selkey"), 1, 32).as("fp"))
-        .localCheckpoint() // feeds the dup aggregate AND the doc rollup
+        .select(col("doc_id"), substring(col("selkey"), 1, 32).as("fp")))
       val dup = sel.groupBy("fp")
         .agg(countDistinct("doc_id").as("nd"))
         .filter(col("nd") >= 2).select("fp")
@@ -1123,11 +1121,11 @@ object TextQueries2 extends Suite {
         expr(s"size(filter(split(text, ' '), w -> w = '$t'))")
           .cast("long").as(s"tf$i")
       }
-      val base = docs(s, d).select(
+      // narrow 6-col frame; feeds stats + scoring
+      val base = Materialize(docs(s, d).select(
         col("doc_id") +:
           expr("size(filter(split(text, ' '), w -> w != ''))")
-            .cast("long").as("dl") +: tfCols: _*)
-        .localCheckpoint() // narrow 6-col frame; feeds stats + scoring
+            .cast("long").as("dl") +: tfCols: _*))
       val statCols = count(lit(1)).as("n_docs") +: sum("dl").as("tok") +:
         terms.indices.map(i =>
           sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).as(s"df$i"))
@@ -1206,11 +1204,11 @@ object TextQueries2 extends Suite {
         expr(s"size(filter(split(text, ' '), w -> w = '$t'))")
           .cast("long").as(s"tf$i")
       }
-      val base = docs(s, d).select(
+      // feeds corpus stats + scoring
+      val base = Materialize(docs(s, d).select(
         col("doc_id") +:
           expr("size(filter(split(text, ' '), w -> w != ''))")
-            .cast("long").as("dl") +: tfCols: _*)
-        .localCheckpoint() // feeds corpus stats + scoring
+            .cast("long").as("dl") +: tfCols: _*))
       val statCols = count(lit(1)).as("n_docs") +: sum("dl").as("tok") +:
         terms.indices.map(i =>
           sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).as(s"df$i"))
@@ -1319,7 +1317,8 @@ object TextQueries2 extends Suite {
     // rebuild; no all-pairs stage, no driver materialization. The
     // rebuilt text is gated as md5 so the compare stays scalar.
     Q("d36_span_removal", (s, d) => {
-      val passages = docs(s, d)
+      // feeds the owner aggregate AND the join back
+      val passages = Materialize(docs(s, d)
         .select(col("doc_id"), filter(split(col("text"), " "),
           x => length(x) > 0).as("__w"))
         .filter(size(col("__w")) > 0)
@@ -1328,8 +1327,7 @@ object TextQueries2 extends Suite {
             |  i -> concat_ws(' ', slice(__w, i * 10 + 1, 10)))"""
             .stripMargin)))
         .toDF("doc_id", "wid", "chunk")
-        .withColumn("fp", md5(col("chunk")))
-        .localCheckpoint() // feeds the owner aggregate AND the join back
+        .withColumn("fp", md5(col("chunk"))))
       val owner = passages.groupBy("fp")
         .agg(min(struct(col("doc_id"), col("wid"))).as("own"))
       passages.join(owner, "fp") // fp-keyed, co-partitioned with owner

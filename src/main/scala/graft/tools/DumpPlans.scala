@@ -51,13 +51,13 @@ object DumpPlans {
     "o63_recursive_cte" ->
       "WITH RECURSIVE executes as an incremental loop (UnionLoop), not a self-join blowup — iteration count bounded by the hierarchy depth",
     "d04_minhash_lsh_neardup" ->
-      "the 100x-critical near-dup shape: one shingle materialization feeds signatures and both verify sides; the banded table is checkpointed once and band joins are equi-joins on band hash (pairs form only inside buckets, volume tracks true near-dups at the 8x8 S-curve); the integer size-bound prune runs before any shingle-array shuffle; AQE splits hot band buckets (AqeSpec)",
+      "the 100x-critical near-dup shape: one shingle materialization feeds signatures and both verify sides; the banded table is materialized once and band joins are equi-joins on band hash (pairs form only inside buckets, volume tracks true near-dups at the 8x8 S-curve); the integer size-bound prune runs before any shingle-array shuffle; AQE splits hot band buckets (AqeSpec)",
     "d07_simhash_neardup" ->
       "pigeonhole banding as equi-joins on 16-bit band keys; each surviving pair is emitted EXACTLY ONCE by the first-matching-band predicate (band k requires bands 0..k-1 differ) — no global distinct over the duplicated candidate stream, so dedup cost is zero shuffles instead of one over all candidates",
     "d12_dup_groups" ->
-      "star-contraction CC as ONE LINEAR JOB: 4 large/small-star alternations, each a one-pass explode symmetrize + window min (one node-keyed exchange per star) + round-closing distinct — exact at ANY component depth, no per-round materialization (every stage single-consumer; checkpointEvery bounds recovery depth at cluster scale)",
+      "star-contraction CC as ONE LINEAR JOB: 4 large/small-star alternations, each a one-pass explode symmetrize + window min (one node-keyed exchange per star) + round-closing distinct — exact at ANY component depth, no per-round materialization (every stage single-consumer; a run deeper than 4 rounds materializes every 4 to bound plan depth)",
     "g01_pagerank" ->
-      "the co-purchase edge list is built once (localCheckpoint — it feeds all 5 hops); each rank is consumed exactly once so the 5 join+aggregate hops run as one linear job with no per-round checkpoints; rank arithmetic is integer ppm so partial-agg order can't flip bits at any parallelism",
+      "the co-purchase edge list is built once (materialized — it feeds all 5 hops); each rank is consumed exactly once so the 5 join+aggregate hops run as one linear job with no per-round checkpoints; rank arithmetic is integer ppm so partial-agg order can't flip bits at any parallelism",
     "s04_session_pairs" ->
       "pair generation with NO second exchange: the groupBy(user, session) reuses the sessionizer's hashpartitioning(user) (subset-satisfied ClusteredDistribution) and the pair expansion is a per-row Generate over the collected set — the textbook distinct + self-join form plans the window sort twice plus a join exchange",
     "t24_multi_needle" ->
@@ -77,11 +77,11 @@ object DumpPlans {
     "d26_knn_sq8" ->
       "SQ8 ANN: the dims-row [min,max] aggregate broadcasts back (BroadcastNestedLoopJoin over a 1-row frame), encoding is a narrow map, and the encoded query set broadcasts against one corpus scan — the corpus never shuffles, and the scanned codes are 4x denser than floats",
     "d27_cdc_chunks" ->
-      "content-defined chunking: the checkpointed chunk table is the ONLY thing later stages touch (no Generate in the final plan — the token window pipeline ran exactly once); dup detection is a fingerprint aggregate with map-side partials",
+      "content-defined chunking: the materialized chunk table is the ONLY thing later stages touch (no Generate in the final plan — the token window pipeline ran exactly once); dup detection is a fingerprint aggregate with map-side partials",
     "d30_knn_pq" ->
       "PQ ANN: corpus encoding is a NARROW codegen'd argmin over the literal codebook (no join anywhere before the code stream), and the query-side 128-entry ADC lookup table broadcasts (BroadcastHashJoin) — the corpus never shuffles until the per-query top-k aggregate over 8-code rows",
     "g03_cc_star" ->
-      "star-contraction CC: each alternation is a node-keyed min aggregate + node-keyed join over the checkpointed edge set — O(log n) rounds total where min-label propagation needs graph-diameter rounds",
+      "star-contraction CC: each alternation is a node-keyed min aggregate + node-keyed join over the materialized edge set — O(log n) rounds total where min-label propagation needs graph-diameter rounds",
     "b23_cov_months" ->
       "ONE shuffle: the pruned scan pre-partitions on suppkey, and the daily aggregate, monthly aggregate AND consecutive-month lead() window all run partition-local (suppkey subset-satisfies every downstream distribution; (suppkey,date) is ~unique so map-side partials had nothing to combine anyway)",
     "t30_bm25_topk" ->
@@ -89,7 +89,7 @@ object DumpPlans {
     "m11_pca_power" ->
       "the Gram matrix is 36 plain sum() columns in ONE whole-stage-codegen aggregate (constant-size map-side partials) — the only corpus pass; the 3-round power iteration is k-bounded driver BigInt on the single collected row",
     "d36_span_removal" ->
-      "the checkpointed passage table is the ONLY input to both the keeper aggregate and the fp-keyed join back (no Generate in the final plan — chunking ran exactly once); owner and occurrence shuffle on the SAME fp key, and the rebuild is one doc-keyed aggregate",
+      "the materialized passage table is the ONLY input to both the keeper aggregate and the fp-keyed join back (no Generate in the final plan — chunking ran exactly once); owner and occurrence shuffle on the SAME fp key, and the rebuild is one doc-keyed aggregate",
     "a24_full_curation" ->
       "the full curation manifest in one plan: keeper resolution is an fp-keyed aggregate + doc-keyed join, the eval n-gram dictionary BROADCASTS for the decontamination anti-gate (the corpus shingle stream never shuffles for membership), and everything downstream is a source-keyed rollup over 20 rows",
     "g04_kcore" ->

@@ -7,22 +7,12 @@ import org.apache.spark.sql.SparkSession
   * ConfSpec — instead of three inlined copies).
   *
   * Releases every persisted RDD block and cached table on the
-  * session, so blocks pinned by `cache()`/`localCheckpoint()` inside
-  * the query just run don't starve later shuffle-heavy queries of
-  * execution memory (measured: uncapped LSH/simhash checkpoints
-  * inflated later queries up to 10x before this hygiene existed).
-  *
-  * CONTRACT — never call this while a localCheckpointed frame the
-  * caller still needs is LIVE. `localCheckpoint` TRUNCATES lineage:
-  * once its blocks are unpersisted they are unrecoverable, and the
-  * next action on the frame dies with
-  * SPARK_JOB_CANCELLED/CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (the r15
-  * probe-corpus incident, SCALE.md). Safe between INDEPENDENT
-  * queries that each rebuild from source (the three call sites);
-  * unsafe inside any loop that holds a checkpointed frame across
-  * iterations — there, keep a handle on each frame you pinned and
-  * unpersist exactly those, and only after the last action that
-  * reads them has run.
+  * session, so blocks held by [[graft.ops.Materialize]] or `cache()`
+  * inside the query just run don't starve later shuffle-heavy
+  * queries of execution memory (measured: uncapped LSH/simhash
+  * materializations inflated later queries up to 10x before this
+  * hygiene existed). A frame still in use afterwards recomputes its
+  * released blocks from lineage.
   *
   * @param blocking true = wait for block removal so the unpersist
   *                 work is never billed to the NEXT timed query (the

@@ -10,18 +10,6 @@ import org.apache.spark.sql.functions._
 class AqeSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val prev = pairs.map { case (k, _) =>
-      k -> util.Try(spark.conf.get(k)).toOption
-    }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("AQE splits a skewed join partition at runtime") {
     withConf(
       "spark.sql.adaptive.enabled" -> "true",

@@ -204,8 +204,7 @@ class CoOccurSpec extends SparkSpec {
     assert(justUnder === arrayDecoded)
   }
 
-  test("pairCountsAuto: join route unpersists its id table once the " +
-      "result materializes (lifecycle listener)") {
+  test("join route: no CacheManager entry, same rows across hygiene") {
     val rnd = new scala.util.Random(31)
     val vocab = (0 until 40).map(i => f"v$i%03d").toArray
     val docs = (0L until 80L).map { d =>
@@ -213,19 +212,22 @@ class CoOccurSpec extends SparkSpec {
     }
     val df = docs.toDF("doc_id", "ws")
     val vdf = vocab.toSeq.toDF("w")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    // forced join route: persists the vocabIds table internally
+    def rows(r: org.apache.spark.sql.DataFrame) =
+      r.select("w1", "w2", "c_xy").collect()
+        .map(x => (x.getString(0), x.getString(1), x.getLong(2))).toSet
+    val expected = rows(CoOccur.pairCountsAuto(df, "doc_id", "ws", vdf,
+      "w", 2L, 8))
+    spark.catalog.clearCache()
+    // forced join route: its id table is materialized, not cached
     val res = CoOccur.pairCountsAuto(
       df, "doc_id", "ws", vdf, "w", 2L, 8, maxBroadcastVocab = 4)
-    assert(res.count() > 0) // drain: the materialization that releases
-    // the release rides the (asynchronous) execution-listener bus —
-    // poll briefly rather than assuming synchronous delivery
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    while (leaked.nonEmpty && System.nanoTime() < deadline)
-      Thread.sleep(50)
-    assert(leaked.isEmpty,
-      s"join-route id table still pinned after drain: $leaked")
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    assert(cache.isEmpty, "the join route registered a cached table")
+    // dropping every block between build and drain costs a recompute
+    graft.tools.SessionHygiene.unpersistAll(spark, blocking = true)
+    assert(expected.nonEmpty)
+    assert(rows(res) === expected)
   }
 
   test("OpenLongCount: counts exactly across growth, including key 0") {

@@ -10,6 +10,19 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** Run `body` with session confs set, restoring them afterwards. */
+  def withConf[T](pairs: (String, String)*)(body: => T): T = {
+    val prev = pairs.map { case (k, _) =>
+      k -> util.Try(spark.conf.get(k)).toOption
+    }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {
