@@ -72,28 +72,6 @@ object Dedup {
       .select(col(id),
         explode(array_distinct(shingleExpr(n))).as("sh"))
 
-  /** Per-doc DISTINCT-shingle counts computed NARROW: the size of the
-    * deduplicated shingle array, read off before any explode — one
-    * scan over the docs, ZERO shuffles. Identical values to
-    * `ngramShingles(...).groupBy(id).count()`, which pays a full
-    * exchange of the shingle stream (the largest intermediate in the
-    * family) just to count rows per doc; feeding THIS to the
-    * verify/jaccard stages instead removes that exchange and the
-    * second evaluation of the shingle pipeline it forces. Docs with
-    * zero shingles (shorter than n words) come out with n = 0 instead
-    * of being absent — indistinguishable downstream, since only docs
-    * appearing in a candidate pair (and so holding >= 1 shingle) are
-    * ever looked up. The single-element explode is a real Generate
-    * node: like [[ngramShingles]], the shingle lambda must NOT
-    * collapse into the words-array projection ([[withWords]]) or
-    * every element_at re-evaluates the split — O(doc_len) per access.
-    */
-  def ngramShingleSizes(df: DataFrame, id: String, text: String,
-      n: Int): DataFrame =
-    withWords(df, id, text)
-      .select(col(id), explode(array(
-        size(array_distinct(shingleExpr(n))).cast("long"))).as("n"))
-
   /** Distinct word n-gram shingles per doc as their xxhash64 values
     * (`shh`), built by ONE kernel pass over the token array — no
     * shingle STRING is ever allocated (2.6M ~25-byte allocations per
@@ -102,9 +80,9 @@ object Dedup {
     * `ngramShingles(...).select(id, xxhash64(sh))` up to 64-bit
     * collisions, which the bucketed consumers already accept
     * ([[commonCountsFromBuckets]]'s key note). Use for consumers that
-    * bucket on the HASH and never surface the shingle; stages whose
-    * oracle sees shingle strings or string order (minhash signatures,
-    * the d29 prefix's (df, sh) tie-break) keep [[ngramShingles]].
+    * bucket on the HASH and never surface the shingle; stages that
+    * need the 60-bit portable hash instead (minhash signatures, the
+    * verify and prefix stages) read [[ngramPortableHashArrays]].
     */
   def ngramShingleHashes(df: DataFrame, id: String, text: String,
       n: Int): DataFrame =
@@ -112,9 +90,20 @@ object Dedup {
       .select(col(id), explode(graft.expressions.GraftFunctions
         .ngram_shingle_hashes(col("__w"), n)).as("shh"))
 
-  /** [[ngramShingleSizes]] over the hashed kernel — per-doc distinct
-    * HASH counts, so sizes agree exactly with what
-    * [[ngramShingleHashes]] consumers count. */
+  /** Per-doc distinct shingle-HASH counts, computed NARROW: the size
+    * of the kernel's hash array, read off before any explode — one
+    * scan over the docs, ZERO shuffles, and sizes agree exactly with
+    * what [[ngramShingleHashes]] consumers count. The groupBy form
+    * (`ngramShingleHashes(...).groupBy(id).count()`) pays a full
+    * exchange of the shingle stream, the largest intermediate in the
+    * family, just to count rows per doc. Docs with zero shingles
+    * (shorter than n words) come out with n = 0 instead of being
+    * absent — indistinguishable downstream, since only docs in a
+    * candidate pair (and so holding >= 1 shingle) are looked up. The
+    * single-element explode is a real Generate node, so the kernel
+    * call does not collapse into the words-array projection
+    * ([[withWords]]).
+    */
   def ngramShingleHashSizes(df: DataFrame, id: String, text: String,
       n: Int): DataFrame =
     withWords(df, id, text)
@@ -141,9 +130,25 @@ object Dedup {
       graft.expressions.GraftFunctions
         .ngram_portable_hashes(col("__w"), n).as("hs"))
 
-  /** [[jaccardVerifyHashedSets]] over the per-doc hash ARRAYS of
-    * [[ngramPortableHashArrays]] (no collect_list exchange, no
-    * second md5 pass — the arrays arrive sorted). */
+  /** Exact Jaccard for candidate pairs over the per-doc SORTED hash
+    * arrays of [[ngramPortableHashArrays]]:
+    * jaccard = |A∩B| / (|A|+|B|-|A∩B|), all-integer inputs, so the
+    * double division is engine-deterministic. Each surviving pair pays
+    * one two-pointer merge ([[graft.expressions.IntersectCountSorted]])
+    * — no (pairs x shingles) explode shuffle, no collect_list
+    * exchange, no second md5 pass. Identical values to a string-
+    * shingle count barring a 60-bit hash collision inside one document
+    * pair (probability ~ |sh|^2 / 2^61; the signature stage rests on
+    * the same hash family).
+    *
+    * `minJaccardPct` (0-100): exact size-bound prune — jaccard can
+    * never exceed min(|A|,|B|)/max(|A|,|B|), so pairs failing
+    * `100*min >= p*max` are dropped on the narrow size table before
+    * the hash arrays are joined in. A necessary condition for
+    * `jaccard >= p/100`, so the row set is unchanged.
+    * `thresholdPct` applies that filter itself in integer space
+    * ([[thresholded]]).
+    */
   def jaccardVerifyHashArrays(candidates: DataFrame, harr: DataFrame,
       id: String, minJaccardPct: Int = 0,
       thresholdPct: Int = 0): DataFrame = {
@@ -290,32 +295,20 @@ object Dedup {
         }: _*)
   }
 
-  /** LSH band keys: md5 over each band's r signature values.
-    * Returns (id, band_id, band_hash) — shuffle-by-band_hash then
-    * pair-within-bucket is the candidate generation.
-    */
-  def lshBands(sigs: DataFrame, id: String, k: Int, rowsPerBand: Int): DataFrame = {
-    val nBands = k / rowsPerBand
-    val bands = (0 until nBands).map { b =>
-      val cols = (0 until rowsPerBand)
-        .map(r => col(s"sig_${b * rowsPerBand + r}").cast("string"))
-      struct(lit(b).as("band_id"),
-        md5(concat_ws("#", cols: _*)).as("band_hash"))
-    }
-    sigs.select(col(id), explode(array(bands: _*)).as("b"))
-      .select(col(id), col("b.band_id"), col("b.band_hash"))
-  }
-
-  /** Candidate pairs, each emitted EXACTLY ONCE — by its first
-    * matching band. A near-dup pair typically collides in several
-    * bands, so the naive bands-join + distinct shuffles the pair
-    * stream at its duplicated size (2.3x at sf0.1, 21M rows) just to
-    * dedup it. Carrying all band hashes on both join sides instead
-    * lets band j's join filter out pairs that already matched in any
-    * band i < j — the union is distinct BY CONSTRUCTION and the
-    * global distinct exchange disappears. Same candidate set as
-    * [[lshCandidates]]; the per-row extra predicate is j string
-    * equality checks against an O(1)-width row.
+  /** LSH candidate pairs (id_1 < id_2) from `sig_0..sig_{k-1}`
+    * signature columns: band b's key is md5 over its `rowsPerBand`
+    * values, and two docs are candidates when they share any band's
+    * key. Each pair is emitted EXACTLY ONCE — by its first matching
+    * band. A near-dup pair typically collides in several bands, so
+    * the naive bands-join + distinct shuffles the pair stream at its
+    * duplicated size (2.3x at sf0.1, 21M rows) just to dedup it.
+    * Carrying all band hashes on both join sides instead lets band
+    * j's join filter out pairs that already matched in any band
+    * i < j — the union is distinct BY CONSTRUCTION and the global
+    * distinct exchange disappears. Same candidate set as the
+    * `SELECT DISTINCT` band join of the d04/d21 oracles (DedupSpec
+    * checks it against a driver-side reference); the per-row extra
+    * predicate is j string equality checks against an O(1)-width row.
     */
   def lshCandidatesOnce(sigs: DataFrame, id: String, k: Int,
       rowsPerBand: Int): DataFrame = {
@@ -344,132 +337,6 @@ object Dedup {
     }.reduce(_ union _)
   }
 
-  /** Candidate pairs from shared LSH buckets (distinct over bands). */
-  def lshCandidates(bands: DataFrame, id: String): DataFrame =
-    bands.as("a")
-      .join(bands.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col(s"a.$id") < col(s"b.$id"))
-      .select(col(s"a.$id").as("id_1"), col(s"b.$id").as("id_2"))
-      .distinct()
-
-  /** Exact Jaccard over shingle sets, restricted to candidate pairs.
-    * jaccard = |A∩B| / (|A|+|B|-|A∩B|), all-integer inputs so the
-    * double division is engine-deterministic.
-    */
-  /** `minJaccardPct` (0-100): exact size-bound prune — jaccard can
-    * never exceed min(|A|,|B|)/max(|A|,|B|), so when the caller will
-    * filter `jaccard >= p/100`, pairs failing `100*min >= p*max` are
-    * eliminated BEFORE the expensive common-shingle join using only
-    * the (cheap) size table. Integer arithmetic, no float compare —
-    * a necessary condition, so the final row set is unchanged.
-    */
-  def jaccardVerify(candidates: DataFrame, shingles: DataFrame,
-      id: String, minJaccardPct: Int = 0): DataFrame = {
-    val sizes = shingles.groupBy(col(id)).agg(count(lit(1)).as("n"))
-    val withSizes = candidates
-      .join(sizes.as("za"), col("id_1") === col(s"za.$id"))
-      .join(sizes.as("zb"), col("id_2") === col(s"zb.$id"))
-      .select(col("id_1"), col("id_2"),
-        col("za.n").as("na"), col("zb.n").as("nb"))
-    val pruned =
-      if (minJaccardPct <= 0) withSizes
-      else withSizes.filter(
-        atLeastPct(least(col("na"), col("nb")),
-          greatest(col("na"), col("nb")), minJaccardPct))
-    pruned
-      .join(shingles.as("sa"), col("id_1") === col(s"sa.$id"))
-      .join(shingles.as("sb"),
-        col("id_2") === col(s"sb.$id") && col("sa.sh") === col("sb.sh"))
-      .groupBy("id_1", "id_2", "na", "nb")
-      .agg(count(lit(1)).as("n_common"))
-      .select(col("id_1"), col("id_2"),
-        (col("n_common").cast("double") /
-          (col("na") + col("nb") - col("n_common"))).as("jaccard"))
-  }
-
-  /** Exact Jaccard for candidate pairs via per-doc shingle ARRAYS:
-    * two set-table joins (one row per pair) and an `array_intersect`,
-    * instead of exploding each pair into its shingle-match rows and
-    * re-aggregating. Bit-identical jaccard to [[jaccardVerify]] (same
-    * integer inputs); different cost shape: rows stay |pairs| and the
-    * (pairs x shingles) shuffle disappears, but each pair pays an
-    * O(|A|+|B|) intersection. Wins when docs are long and candidates
-    * few; on d04's shape at sf0.1 (tiny docs, 364k candidate pairs —
-    * the synthetic corpus is near-dup-heavy) the explode form
-    * measured faster (2.1s vs 2.9s), so d04 keeps [[jaccardVerify]].
-    */
-  def jaccardVerifySets(candidates: DataFrame, shingles: DataFrame,
-      id: String, minJaccardPct: Int = 0): DataFrame = {
-    val sets = shingles.groupBy(col(id))
-      .agg(collect_list(col("sh")).as("shs")) // already distinct per doc
-    // size-bound prune on the NARROW size table first (same necessary
-    // condition as [[jaccardVerify]]): pruned pairs never shuffle the
-    // shingle arrays at all.
-    val pruned =
-      if (minJaccardPct <= 0) candidates
-      else {
-        val sizes = shingles.groupBy(col(id)).agg(count(lit(1)).as("n"))
-        candidates
-          .join(sizes.as("pa"), col("id_1") === col(s"pa.$id"))
-          .join(sizes.as("pb"), col("id_2") === col(s"pb.$id"))
-          .filter(atLeastPct(least(col("pa.n"), col("pb.n")),
-            greatest(col("pa.n"), col("pb.n")), minJaccardPct))
-          .select(col("id_1"), col("id_2"))
-      }
-    pruned
-      .join(sets.as("za"), col("id_1") === col(s"za.$id"))
-      .join(sets.as("zb"), col("id_2") === col(s"zb.$id"))
-      .select(col("id_1"), col("id_2"),
-        size(array_intersect(col("za.shs"), col("zb.shs"))).as("n_common"),
-        size(col("za.shs")).as("na"), size(col("zb.shs")).as("nb"))
-      .select(col("id_1"), col("id_2"),
-        (col("n_common").cast("double") /
-          (col("na") + col("nb") - col("n_common"))).as("jaccard"))
-  }
-
-  /** Exact Jaccard for candidate pairs via SORTED HASHED shingle
-    * sets: each doc's shingle set becomes an ascending array of
-    * 60-bit portable hashes, the size-bound prune runs on the narrow
-    * size table first, and surviving pairs pay one two-pointer merge
-    * ([[graft.expressions.IntersectCountSorted]]) instead of a
-    * per-row string hash set. Identical jaccard values to
-    * [[jaccardVerify]]/[[jaccardVerifySets]] barring a 60-bit hash
-    * collision inside one document pair (probability ~ |sh|^2 / 2^61;
-    * the signature stage already rests on the same hash family).
-    * This is the scale path: verify cost is |pairs| * O(|A|+|B|)
-    * primitive compares, with no (pairs x shingles) explode shuffle.
-    */
-  def jaccardVerifyHashedSets(candidates: DataFrame, shingles: DataFrame,
-      id: String, minJaccardPct: Int = 0,
-      sizesNarrow: Option[DataFrame] = None): DataFrame = {
-    import graft.expressions.GraftFunctions.intersect_count_sorted
-    val hsets = shingles.groupBy(col(id))
-      .agg(sort_array(collect_list(Text.portableHash(col("sh")))).as("hs"))
-    val pruned =
-      if (minJaccardPct <= 0) candidates
-      else {
-        val sizes = sizesNarrow.getOrElse(
-          shingles.groupBy(col(id)).agg(count(lit(1)).as("n")))
-        candidates
-          .join(sizes.as("pa"), col("id_1") === col(s"pa.$id"))
-          .join(sizes.as("pb"), col("id_2") === col(s"pb.$id"))
-          .filter(atLeastPct(least(col("pa.n"), col("pb.n")),
-            greatest(col("pa.n"), col("pb.n")), minJaccardPct))
-          .select(col("id_1"), col("id_2"))
-      }
-    pruned
-      .join(hsets.as("za"), col("id_1") === col(s"za.$id"))
-      .join(hsets.as("zb"), col("id_2") === col(s"zb.$id"))
-      .select(col("id_1"), col("id_2"),
-        intersect_count_sorted(col("za.hs"), col("zb.hs")).as("n_common"),
-        size(col("za.hs")).as("na"), size(col("zb.hs")).as("nb"))
-      .select(col("id_1"), col("id_2"),
-        (col("n_common").cast("double") /
-          (col("na") + col("nb") - col("n_common"))).as("jaccard"))
-  }
-
   /** All-pairs Jaccard over shingle sets, bucket form: pairs sharing
     * >= 1 (non-heavy) shingle get their common count from
     * [[commonCountsFromBuckets]], then sizes join in. Use when
@@ -484,7 +351,7 @@ object Dedup {
       maxDf: Int = 10000, sizesNarrow: Option[DataFrame] = None,
       thresholdPct: Int = 0): DataFrame = {
     // callers that derive shingles from a doc table pass the
-    // zero-shuffle [[ngramShingleSizes]] projection; the groupBy
+    // zero-shuffle [[ngramShingleHashSizes]] projection; the groupBy
     // fallback keeps the op usable over an arbitrary shingle stream
     val sizes = sizesNarrow.getOrElse(
       shingles.groupBy(col(id)).agg(count(lit(1)).as("n")))
@@ -526,9 +393,10 @@ object Dedup {
   }
 
   /** Prefix-filtered candidate pairs for an EXACT high-threshold
-    * similarity join (AllPairs, Bayardo et al., WWW'07): order every
-    * doc's shingles by ascending document frequency (rarest first —
-    * ties on the shingle string, a total order), keep only the first
+    * similarity join (AllPairs, Bayardo et al., WWW'07), over the
+    * per-doc portable-hash arrays of [[ngramPortableHashArrays]]:
+    * order every doc's shingle hashes by ascending document frequency
+    * (rarest first — ties on the hash, a total order), keep only the first
     * `n - ceil(t*n) + 1` as the doc's PREFIX, and bucket-join on
     * prefix entries alone. Theorem: two sets with Jaccard >= t must
     * share at least one prefix shingle under any global order — so
@@ -539,36 +407,8 @@ object Dedup {
     * exact-join complement to LSH (d04, approximate) and to the full
     * bucket join (d05/d12, needed only for LOW thresholds where
     * prefixes degenerate). `tPct` in percent for exact integer
-    * arithmetic.
-    */
-  def prefixFilteredCandidates(shingles: DataFrame, id: String,
-      tPct: Int, sizesNarrow: Option[DataFrame] = None): DataFrame = {
-    require(tPct > 0 && tPct <= 100, s"tPct out of range: $tPct")
-    val docFreq = shingles.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    val sizes = sizesNarrow.getOrElse(
-      shingles.groupBy(col(id)).agg(count(lit(1)).as("n")))
-    val wDoc = Window.partitionBy(col(id)).orderBy(col("df"), col("sh"))
-    val prefix = shingles
-      .join(docFreq, "sh")
-      .withColumn("rk", row_number().over(wDoc))
-      .join(sizes, id)
-      .filter(col("rk") <=
-        col("n") - expr(s"(($tPct * n) + 99) div 100") + 1)
-      .select(col(id), col("sh"))
-    prefix.groupBy(col("sh")).agg(sort_array(collect_list(col(id))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .select(graft.expressions.ArrayPairs
-        .array_pairs(col("ids")).as(Seq("id_1", "id_2")))
-      .distinct()
-  }
-
-  /** [[prefixFilteredCandidates]] over the per-doc portable-hash
-    * arrays of [[ngramPortableHashArrays]]. The AllPairs theorem
-    * holds under ANY global total order, so (df, hash) replaces
-    * (df, sh) as the tie-break — the candidate SET may differ, the
-    * verified qualifying set cannot (DedupSpec proves it) — and the
-    * whole prefix pipeline moves from 25-byte shingle strings to
-    * 8-byte longs with zero additional md5 passes.
+    * arithmetic. The whole prefix pipeline runs on 8-byte longs, with
+    * no shingle string and no md5 pass beyond the arrays' own.
     */
   def prefixFilteredCandidatesHashed(harr: DataFrame, id: String,
       tPct: Int): DataFrame = {
@@ -597,19 +437,20 @@ object Dedup {
     * two physical paths picked by the threshold:
     *
     *  - `tPct >= 60`: AllPairs prefix filter ([[
-    *    prefixFilteredCandidates]], exact by the prefix theorem) +
-    *    hashed-set verify with the size-ratio prune at tPct. At
-    *    t=0.8 only each doc's rarest ~20% of shingles enter buckets,
-    *    so the candidate stream shrinks ~(1-t)^2 — the d29 discipline
-    *    composed into the edge stage.
+    *    prefixFilteredCandidatesHashed]], exact by the prefix theorem)
+    *    + [[jaccardVerifyHashArrays]] with the size-ratio prune at
+    *    tPct. At t=0.8 only each doc's rarest ~20% of shingles enter
+    *    buckets, so the candidate stream shrinks ~(1-t)^2 — the d29
+    *    discipline composed into the edge stage.
     *  - below 60: full df-capped buckets ([[jaccardAllPairs]]) — at
     *    low thresholds prefixes degenerate (t=0.1 keeps 90% of
     *    shingles) and the bucket join with the df cap is the right
     *    shape.
     *
-    * Both paths take per-doc sizes from the zero-shuffle
-    * [[ngramShingleSizes]] projection rather than a groupBy over the
-    * shingle stream. The 60 crossover: prefix length is
+    * Neither path takes per-doc sizes from a groupBy over the shingle
+    * stream: the prefix path reads `size(hs)` off the hash arrays, the
+    * bucket path the zero-shuffle [[ngramShingleHashSizes]]
+    * projection. The 60 crossover: prefix length is
     * n - ceil(t*n) + 1, so below t=0.6 more than ~40% of each doc's
     * shingles still enter buckets AND the verify stage joins the full
     * hashed-set arrays per surviving pair — measured slower than the

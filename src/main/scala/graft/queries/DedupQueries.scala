@@ -136,6 +136,17 @@ object DedupQueries extends Suite {
     "bands AS (\n  " + bands.mkString("\n  UNION ALL\n  ") + ")"
   }
 
+  /** `doc_id, sig_0..sig_{K-1}`: MinHash signatures from the
+    * `minhash_sigs` kernel over the sorted portable-hash arrays of
+    * [[Dedup.ngramPortableHashArrays]] — the same values as
+    * [[Dedup.minhashSignatures]] over the string shingles ([[sigSelect]]
+    * is the oracle of both), one kernel call per doc, no aggregate. */
+  private def minhashSigCols(harr: DataFrame): DataFrame =
+    harr.select(col("doc_id"), graft.expressions.GraftFunctions
+        .minhash_sigs(col("hs"), K).as("sigs"))
+      .select(col("doc_id") +: (0 until K)
+        .map(i => element_at(col("sigs"), i + 1).as(s"sig_$i")): _*)
+
   /** Cosine between two embedding columns, double-accumulated and
     * rounded to 6 (mirror of Similarity.cosine). */
   private[queries] def cosSql(a: String, b: String): String = {
@@ -195,14 +206,10 @@ object DedupQueries extends Suite {
       val harr = Materialize(
         Dedup.ngramPortableHashArrays(base, "doc_id", "text", 3)
           .filter(size(col("hs")) > 0)) // mirror the exploded form's absence
-      val sigs = (0 until K).foldLeft(
-        harr.select(col("doc_id"), graft.expressions.GraftFunctions
-          .minhash_sigs(col("hs"), K).as("sigs"))) { (df, i) =>
-        df.withColumn(s"sig_$i", element_at(col("sigs"), i + 1))
-      }.drop("sigs")
       // exactly-once candidates: no global distinct over the 2.3x-
       // duplicated pair stream (see lshCandidatesOnce scaladoc)
-      val cands = Dedup.lshCandidatesOnce(sigs, "doc_id", K, RowsPerBand)
+      val cands = Dedup.lshCandidatesOnce(minhashSigCols(harr), "doc_id",
+        K, RowsPerBand)
       // raw jaccard, not round-6: the ratio of exact ints is
       // bit-identical across engines, while rounding can flip when a
       // rational lands exactly on a 1e-6 boundary (e.g. k/640)
@@ -751,15 +758,19 @@ object DedupQueries extends Suite {
     // LSH relies on; emitting both makes the tradeoff auditable (even
     // at K=64 the estimate moves in 1/64 steps with stddev
     // ~sqrt(J(1-J)/64) ~ 0.04 near J=0.9 — why the exact verify pass
-    // after banding is not optional at 0.9 thresholds).
+    // after banding is not optional at 0.9 thresholds). Runs d04's
+    // hashed pipeline; the oracle keeps the string shingles and the
+    // DISTINCT band join, so it checks that pipeline independently.
     Q("d21_minhash_est", (s, d) => {
       val base = docs(s, d).filter(col("doc_id") < 1000)
-      val sh = Materialize(Dedup.ngramShingles(base, "doc_id", "text", 3))
-      // four consumers (bands self-join x2, est join x2) — one row
-      // per doc, materialize instead of recomputing the 64-min agg
-      val sigs = Materialize(Dedup.minhashSignatures(sh, "doc_id", K))
-      val cands = Dedup.lshCandidates(
-        Dedup.lshBands(sigs, "doc_id", K, RowsPerBand), "doc_id")
+      // signatures, prune sizes and both verify sides read the arrays
+      val harr = Materialize(
+        Dedup.ngramPortableHashArrays(base, "doc_id", "text", 3)
+          .filter(size(col("hs")) > 0))
+      // three consumers (the band table, est join x2) — one row per
+      // doc, materialize instead of re-running the signature kernel
+      val sigs = Materialize(minhashSigCols(harr))
+      val cands = Dedup.lshCandidatesOnce(sigs, "doc_id", K, RowsPerBand)
       val nMatch = (0 until K).map(i =>
         when(col(s"a.sig_$i") === col(s"b.sig_$i"), 1).otherwise(0))
         .reduce(_ + _)
@@ -767,8 +778,8 @@ object DedupQueries extends Suite {
         .join(sigs.as("a"), col("id_1") === col("a.doc_id"))
         .join(sigs.as("b"), col("id_2") === col("b.doc_id"))
         .select(col("id_1"), col("id_2"), nMatch.as("n_match"))
-      Dedup.jaccardVerify(cands, sh, "doc_id", minJaccardPct = 90)
-        .filter(col("jaccard") >= 0.9)
+      Dedup.jaccardVerifyHashArrays(cands, harr, "doc_id",
+          minJaccardPct = 90, thresholdPct = 90)
         .join(est, Seq("id_1", "id_2"))
         .select(col("id_1"), col("id_2"), col("n_match"),
           (col("n_match").cast("double") / K).as("est_jaccard"),
@@ -1022,7 +1033,7 @@ object DedupQueries extends Suite {
 
     // D29: EXACT high-threshold similarity join via AllPairs prefix
     // filtering (Bayardo et al., WWW'07 — see
-    // Dedup.prefixFilteredCandidates): only each doc's rarest ~20%
+    // Dedup.prefixFilteredCandidatesHashed): only each doc's rarest ~20%
     // of shingles (df-ascending prefix at t=0.8) enter buckets, so
     // the pair stream shrinks ~(1-t)^2 while the result stays
     // provably complete. The oracle is the plain quadratic Jaccard

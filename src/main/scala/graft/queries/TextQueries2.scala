@@ -182,7 +182,7 @@ object TextQueries2 extends Suite {
       // explode(array(...)): Generate barrier so the counts array is
       // evaluated ONCE per row — ~10 downstream references would
       // otherwise re-run the kernel per reference after
-      // CollapseProject (the ngramShingleSizes discipline)
+      // CollapseProject (the Dedup.ngramShingleHashSizes discipline)
       val withC = docs(s, d).select(col("doc_id"), col("text"),
         explode(array(graft.expressions.GraftFunctions
           .count_markers(col("text"), flat))).as("__c"))

@@ -31,29 +31,56 @@ class DedupSpec extends SparkSpec {
   test("LSH buckets identical docs together; jaccard verify = 1.0") {
     val df = Seq((1L, "a b c d e f g h"), (2L, "a b c d e f g h"),
       (3L, "q r s t u v w x")).toDF("doc_id", "text")
-    val sh = Dedup.wordShingles(df, "doc_id", "text")
-    val cands = Dedup.lshCandidates(
-      Dedup.lshBands(
-        Dedup.minhashSignatures(sh, "doc_id", 8), "doc_id", 8, 2), "doc_id")
-    val verified = Dedup.jaccardVerify(cands, sh, "doc_id").collect()
+    val harr = Dedup.ngramPortableHashArrays(df, "doc_id", "text", 1)
+    val k = 8
+    val sigs = harr.select(col("doc_id"), graft.expressions.GraftFunctions
+        .minhash_sigs(col("hs"), k).as("s"))
+      .select(col("doc_id") +: (0 until k)
+        .map(i => element_at(col("s"), i + 1).as(s"sig_$i")): _*)
+    val cands = Dedup.lshCandidatesOnce(sigs, "doc_id", k, 2)
+    val verified = Dedup.jaccardVerifyHashArrays(cands, harr, "doc_id")
+      .collect()
     assert(verified.length === 1)
     assert(verified(0).getLong(0) === 1L && verified(0).getLong(1) === 2L)
     assert(verified(0).getDouble(2) === 1.0)
   }
 
-  test("jaccardVerifySets == jaccardVerify (bit-identical on real docs)") {
-    val base = Tables.load(spark, sf, "documents")
-      .filter(col("doc_id") < 200)
-    val sh = Dedup.wordShingles(base, "doc_id", "text")
-    val cands = Dedup.lshCandidates(
-      Dedup.lshBands(
-        Dedup.minhashSignatures(sh, "doc_id", 8), "doc_id", 8, 2), "doc_id")
-    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val a = key(Dedup.jaccardVerify(cands, sh, "doc_id"))
-    val b = key(Dedup.jaccardVerifySets(cands, sh, "doc_id"))
-    assert(a === b)
-    assert(a.nonEmpty)
+  test("lshCandidatesOnce == pairs sharing a band, each emitted once") {
+    val k = 16; val r = 4 // 4 bands of 4 rows
+    // every doc starts with unique signature values ...
+    val base = (1L to 14L)
+      .map(id => id -> Array.tabulate(k)(j => id * 100 + j)).toMap
+    // ... then pairs copy whole bands from their partner
+    def share(a: Long, b: Long, bands: Int*): Unit = bands.foreach { bd =>
+      (bd * r until (bd + 1) * r).foreach(j => base(b)(j) = base(a)(j))
+    }
+    share(1, 2, 0) // exactly one band each, first ...
+    share(3, 4, 2) // ... middle ...
+    share(5, 6, 3) // ... and last
+    share(7, 8, 1, 2, 3) // three bands: must still come out once
+    share(11, 12, 1); share(11, 13, 1) // a three-doc bucket
+    // no band: 3 of band 0's 4 rows agree, and rows of different
+    // bands agree, but no band agrees on all of its rows
+    (0 until r - 1).foreach(j => base(10)(j) = base(9)(j))
+    base(14)(4) = base(9)(4); base(14)(8) = base(9)(8)
+    val sigs = base.toSeq.map { case (id, s) => (id, s.toSeq) }
+      .toDF("doc_id", "s")
+      .select(col("doc_id") +: (0 until k)
+        .map(j => element_at(col("s"), j + 1).as(s"sig_$j")): _*)
+      .repartition(3)
+    val got = Dedup.lshCandidatesOnce(sigs, "doc_id", k, r)
+    // driver-side reference: ids a < b agreeing on some band's r values
+    val expected = (for {
+      a <- base.keys; b <- base.keys if a < b
+      if (0 until k / r).exists(bd =>
+        (bd * r until (bd + 1) * r).forall(j => base(a)(j) == base(b)(j)))
+    } yield (a, b)).toSet
+    assert(expected === Set((1L, 2L), (3L, 4L), (5L, 6L), (7L, 8L),
+      (11L, 12L), (11L, 13L), (12L, 13L)))
+    val rows = got.collect().map(x => (x.getLong(0), x.getLong(1)))
+    assert(rows.toSet === expected)
+    assert(rows.length === rows.distinct.length)
+    assert(got.count() === got.distinct().count())
   }
 
   test("bagOfWordsKey: whitespace runs don't change the key") {
@@ -186,37 +213,28 @@ class DedupSpec extends SparkSpec {
 
   test("prefix filtering is exact at t=0.8 and prunes the pair stream") {
     import org.apache.spark.sql.functions._
-    val sh = Dedup.ngramShingles(
-      Tables.load(spark, sf, "documents"), "doc_id", "text", 3)
-      .localCheckpoint()
-    def qualifying(c: org.apache.spark.sql.DataFrame) =
-      Dedup.jaccardVerifyHashedSets(c, sh, "doc_id", minJaccardPct = 80)
-        .filter(col("jaccard") >= 0.8)
+    val docsDf = Tables.load(spark, sf, "documents")
+    def pairSet(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("jaccard") >= 0.8)
         .select("id_1", "id_2").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val prefixCands = Dedup.prefixFilteredCandidates(sh, "doc_id", 80)
+    val harr = Dedup.ngramPortableHashArrays(docsDf, "doc_id", "text", 3)
+      .filter(size(col("hs")) > 0).localCheckpoint()
+    val prefixCands = Dedup.prefixFilteredCandidatesHashed(harr, "doc_id", 80)
       .localCheckpoint()
-    val fullCands = Dedup.jaccardAllPairs(sh, "doc_id")
-      .select("id_1", "id_2").localCheckpoint()
+    // ground truth: every pair sharing a string shingle, exact jaccard
+    val full = Dedup.jaccardAllPairs(
+      Dedup.ngramShingles(docsDf, "doc_id", "text", 3), "doc_id")
+      .localCheckpoint()
     // exactness: verifying the pruned candidates finds the identical
     // qualifying pair set the full bucket join finds
-    assert(qualifying(prefixCands) === qualifying(fullCands))
-    // the hashed prefix path ((df, h) order over portable-hash
-    // arrays) reaches the same qualifying set — AllPairs is exact
-    // under any global total order
-    val harr = Dedup.ngramPortableHashArrays(
-      Tables.load(spark, sf, "documents"), "doc_id", "text", 3)
-      .filter(size(col("hs")) > 0).localCheckpoint()
-    val hashedCands = Dedup.prefixFilteredCandidatesHashed(harr, "doc_id", 80)
-    val viaHashed = Dedup.jaccardVerifyHashArrays(hashedCands, harr,
-        "doc_id", minJaccardPct = 80)
-      .filter(col("jaccard") >= 0.8)
-      .select("id_1", "id_2").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(viaHashed === qualifying(fullCands))
+    val qualifying = pairSet(full)
+    assert(qualifying.nonEmpty)
+    assert(pairSet(Dedup.jaccardVerifyHashArrays(prefixCands, harr,
+      "doc_id", minJaccardPct = 80)) === qualifying)
     // and the candidate stream actually shrank (the point of the
     // algorithm — rarest-20%-of-shingles buckets)
-    val (np, nf) = (prefixCands.count(), fullCands.count())
+    val (np, nf) = (prefixCands.count(), full.count())
     assert(np * 2 < nf,
       s"prefix candidates $np not meaningfully below full $nf")
   }
