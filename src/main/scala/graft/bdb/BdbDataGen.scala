@@ -438,14 +438,24 @@ object BdbDataGen {
     * `<csvBase>/<table>/`. No field ever contains '|', '"' or a
     * newline, so the unquoted format round-trips exactly through
     * BdbCatalog's quote-less readers.
+    *
+    * Each table is written as at most `defaultParallelism` files: the
+    * fact tables' 32 generator partitions are coalesced here (a
+    * 32-core session writes them as they are), so a small session
+    * does not pay per-file task and commit cost on tiny files. The
+    * rows and their order are those of [[frames]]. The tables are
+    * written concurrently ([[BdbCatalog.perTable]]).
     */
   def writeCsv(spark: SparkSession, csvBase: String, c: Counts,
-      clickSkew: Double = 1.0): Unit =
-    frames(spark, c, clickSkew).foreach { case (t, df) =>
-      df.write.mode("overwrite")
+      clickSkew: Double = 1.0): Unit = {
+    val fs = frames(spark, c, clickSkew)
+    val files = spark.sparkContext.defaultParallelism
+    BdbCatalog.perTable(spark) { t =>
+      fs(t).coalesce(files).write.mode("overwrite")
         .option("sep", "|").option("quote", "")
         .csv(s"$csvBase/$t")
     }
+  }
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,

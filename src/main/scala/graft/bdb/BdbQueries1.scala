@@ -213,16 +213,20 @@ object BdbQueries1 {
     import org.apache.spark.ml.classification.LogisticRegression
     import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
     import org.apache.spark.ml.feature.VectorAssembler
-    val users = q05Features(s, categoryId)
-    val assembled = new VectorAssembler()
-      .setInputCols(Array("clicks_total", "college_education", "male"))
-      .setOutputCol("features").transform(users)
+    val inputs = Array("clicks_total", "college_education", "male")
+    // held once for the fit, the evaluator and the confusion counts
+    val assembled = graft.ops.Materialize(new VectorAssembler()
+      .setInputCols(inputs).setOutputCol("features")
+      .transform(q05Features(s, categoryId)))
     val lr = new LogisticRegression().setRegParam(0.0).setMaxIter(100)
       .setTol(1e-9).setStandardization(true)
     val model = lr.fit(assembled)
-    val pred = model.transform(assembled)
+    // scored as a Column, not by model.transform (see logregMargin)
+    val margin = graft.ops.MlPipelines.logregMargin(model, inputs.map(col))
+    val pred = assembled.select(col("label"), margin.as("margin"))
+      .withColumn("prediction", when(col("margin") > 0, 1.0).otherwise(0.0))
     val auc = new BinaryClassificationEvaluator()
-      .setRawPredictionCol("rawPrediction").evaluate(pred)
+      .setRawPredictionCol("margin").evaluate(pred)
     pred.agg(count(lit(1)).as("n"),
       sum(when(col("prediction") === col("label"), 1).otherwise(0)).as("n_correct"),
       sum(when(col("prediction") === 1.0 && col("label") === 1.0, 1).otherwise(0)).as("tp"),

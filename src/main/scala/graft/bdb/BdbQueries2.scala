@@ -15,11 +15,14 @@ object BdbQueries2 {
   private def kmeansSummary(data: org.apache.spark.sql.DataFrame,
       k: Int) = {
     import org.apache.spark.ml.clustering.KMeans
+    // held once for the distinct count, the fit and its summary's
+    // predictions, so the feature plan runs once
+    val held = graft.ops.Materialize(data)
     // distinct over the assembled vector column — the same points the
     // fit sees, so the call sites don't repeat their column lists
-    val nDistinct = data.select("features").distinct().count()
+    val nDistinct = held.select("features").distinct().count()
     val kk = math.max(1, math.min(k, nDistinct.toInt))
-    new KMeans().setK(kk).setMaxIter(20).setSeed(42L).fit(data)
+    new KMeans().setK(kk).setMaxIter(20).setSeed(42L).fit(held)
   }
 
   /** q16: web sales +/- returns in the week before/after a pivot date,

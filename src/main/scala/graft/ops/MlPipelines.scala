@@ -1,11 +1,12 @@
 package graft.ops
 
-import org.apache.spark.ml.classification.{LogisticRegression, NaiveBayes}
+import org.apache.spark.ml.classification.{LogisticRegression,
+  LogisticRegressionModel, NaiveBayes}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.feature.HashingTF
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -52,6 +53,24 @@ object MlPipelines {
       .withColumn("wssse", round(lit(cost), 3))
   }
 
+  /** A binary logistic model's margin, w·x + b, as a Column over one
+    * Column per feature, summed in feature order. `margin > 0` is the
+    * model's default 0.5 probability threshold, and the margin is the
+    * `rawPrediction` score `BinaryClassificationEvaluator` ranks by.
+    * Scoring with it instead of `model.transform` keeps the model out
+    * of the task closure: a fitted model's training summary holds the
+    * session, which does not serialize once an `Observation` has run
+    * in it.
+    */
+  def logregMargin(model: LogisticRegressionModel,
+      features: Seq[Column]): Column = {
+    require(features.length == model.numFeatures,
+      s"${features.length} feature columns for ${model.numFeatures} coefficients")
+    features.zip(model.coefficients.toArray)
+      .map { case (x, w) => x.cast("double") * lit(w) }
+      .reduce(_ + _) + lit(model.intercept)
+  }
+
   /** Logistic regression (no penalty, 100 iter, tol 1e-9,
     * standardization on) — label = upper half of the label space;
     * outputs precision / AUC / confusion counts like the reference's
@@ -65,9 +84,13 @@ object MlPipelines {
     val lr = new LogisticRegression().setRegParam(0.0).setMaxIter(100)
       .setTol(1e-9).setLabelCol("y").setFeaturesCol("features")
     val model = lr.fit(train)
-    val pred = model.transform(test)
+    val emb = col("embedding").cast("array<float>")
+    val margin = logregMargin(model,
+      (1 to model.numFeatures).map(i => element_at(emb, i)))
+    val pred = test.select(col("y"), margin.as("margin"))
+      .withColumn("prediction", when(col("margin") > 0, 1.0).otherwise(0.0))
     val auc = new BinaryClassificationEvaluator().setLabelCol("y")
-      .setRawPredictionCol("rawPrediction").evaluate(pred)
+      .setRawPredictionCol("margin").evaluate(pred)
     pred.agg(
       count(lit(1)).as("n_test"),
       sum(when(col("prediction") === col("y"), 1).otherwise(0)).as("n_correct"),

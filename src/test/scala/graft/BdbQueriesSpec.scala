@@ -174,4 +174,58 @@ class BdbQueriesSpec extends SparkSpec {
     assert(graft.ops.Text.wordList(spark, neg.getAbsolutePath)
       == BdbQueries1.defaultNegative)
   }
+
+  test("q05 scores after an Observation ran; same result as model.transform") {
+    import org.apache.spark.ml.classification.{LogisticRegression,
+      LogisticRegressionModel}
+    import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
+    import org.apache.spark.ml.feature.VectorAssembler
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.functions._
+    ready
+    // a completed Observation puts a non-serializable ObservationManager
+    // in the session, which a model's training summary reaches
+    val obs = Observation()
+    spark.range(0, 3).observe(obs, count(lit(1)).as("n")).collect()
+    assert(obs.get("n") === 3L)
+    val got = BdbQueries1.q05(spark).collect().head
+    // MLlib's own scoring of the same fit; a model loaded back from
+    // disk carries no training summary, so its transform serializes
+    val assembled = new VectorAssembler()
+      .setInputCols(Array("clicks_total", "college_education", "male"))
+      .setOutputCol("features").transform(BdbQueries1.q05Features(spark))
+    val fit = new LogisticRegression().setRegParam(0.0).setMaxIter(100)
+      .setTol(1e-9).setStandardization(true).fit(assembled)
+    val dir = java.nio.file.Files.createTempDirectory("q05-model").toString
+    fit.write.overwrite().save(dir)
+    val pred = LogisticRegressionModel.load(dir).transform(assembled)
+    val auc = new BinaryClassificationEvaluator()
+      .setRawPredictionCol("rawPrediction").evaluate(pred)
+    def n(c: org.apache.spark.sql.Column): Long = pred.filter(c).count()
+    val p1 = col("prediction") === 1.0
+    val l1 = col("label") === 1.0
+    assert(got.getAs[Long]("n") === pred.count())
+    assert(got.getAs[Long]("n_correct") === n(col("prediction") === col("label")))
+    assert(got.getAs[Long]("tp") === n(p1 && l1))
+    assert(got.getAs[Long]("fp") === n(p1 && !l1))
+    assert(got.getAs[Long]("fn") === n(!p1 && l1))
+    assert(got.getAs[Double]("auc") ===
+      BigDecimal(auc).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    assert(got.getAs[Long]("tp") + got.getAs[Long]("fn") > 0)
+  }
+
+  test("q20's k-means fit plans its features once (job count)") {
+    ready
+    val sc = spark.sparkContext
+    val group = s"q20-jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, group)
+    try BdbQueries2.q20(spark).collect() finally sc.clearJobGroup()
+    val jobs = sc.statusTracker.getJobIdsForGroup(group).length
+    assert(jobs <= Q20Jobs, s"q20 ran $jobs jobs")
+  }
+
+  /** q20's jobs on the fixture with its features materialized once
+    * (50 when the distinct count, the fit and the summary each
+    * re-planned the feature pipeline). */
+  private val Q20Jobs = 26
 }

@@ -14,17 +14,20 @@ import graft.bdb.BdbBenchmarkRunner
 class BdbRunnerSpec extends SparkSpec {
 
   test("loadTest converts pipe-CSV to parquet with schemas intact") {
-    val base = "/root/repo/target/graft-tmp/bdb-csv"
-    val out = "/root/repo/target/graft-tmp/bdb-parquet-lt"
-    // write the fixture as dataGen-style pipe CSV (no quoting)
+    val base = "target/graft-tmp/bdb-csv"
+    val out = "target/graft-tmp/bdb-parquet-lt"
+    // the fixture as dataGen-style pipe CSV (no quoting)
+    graft.bdb.BdbDataGen.writeCsv(spark, base, graft.bdb.BdbDataGen.Counts(0.0))
     val frames = BdbFixture.frames(spark)
-    frames.foreach { case (t, df) =>
-      df.write.mode("overwrite")
-        .option("sep", "|").option("quote", "")
-        .csv(s"$base/$t")
-    }
-    val report = graft.bdb.BdbCatalog.loadTest(spark, base, out)
-    assert(report.size === 23)
+    val sc = spark.sparkContext
+    val group = s"loadtest-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, group)
+    val report = try graft.bdb.BdbCatalog.loadTest(spark, base, out)
+      finally sc.clearJobGroup()
+    // the pool's threads inherit the caller's job group: one job per
+    // table (the row count rides the write), none outside the group
+    assert(sc.statusTracker.getJobIdsForGroup(group).length === 23)
+    assert(report.map(_._1) === graft.bdb.BdbSchemas.tables)
     report.foreach { case (t, n, secs) =>
       assert(n === frames(t).count(), s"$t row count drifted")
       assert(secs >= 0)
@@ -34,6 +37,18 @@ class BdbRunnerSpec extends SparkSpec {
     val q01 = graft.bdb.BdbQueries1
       .q01(spark, stores = Seq(1, 2, 3, 4, 5), minCount = 0).count()
     assert(q01 > 0)
+  }
+
+  test("loadTest throws when a table's CSV directory is missing") {
+    val base = "target/graft-tmp/bdb-csv-missing"
+    graft.bdb.BdbDataGen.writeCsv(spark, base, graft.bdb.BdbDataGen.Counts(0.0))
+    val gone = new java.io.File(s"$base/reason")
+    org.apache.commons.io.FileUtils.deleteDirectory(gone)
+    val e = intercept[Exception] {
+      graft.bdb.BdbCatalog.loadTest(spark, base,
+        "target/graft-tmp/bdb-parquet-missing")
+    }
+    assert(e.getMessage.contains(gone.getPath), e.getMessage)
   }
 
   test("BdbBenchmarkRunner times all 30 queries from a parquet layout") {

@@ -28,6 +28,20 @@ class MlThresholdSpec extends SparkSpec {
     assert(auc > 0.45, s"auc=$auc") // embeddings are weakly predictive
   }
 
+  test("logreg: scores after an Observation ran in the session") {
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.functions.{count, lit}
+    // a completed Observation leaves a non-serializable manager in the
+    // session, which a fitted model's training summary reaches
+    val obs = Observation()
+    spark.range(0, 3).observe(obs, count(lit(1)).as("n")).collect()
+    assert(obs.get("n") === 3L)
+    val r = MlPipelines.logregMllib(spark, sf).collect()(0)
+    val cells = Seq("tp", "fp", "fn", "tn").map(r.getAs[Long])
+    assert(cells.sum === r.getAs[Long]("n_test"))
+    assert(cells(0) + cells(3) === r.getAs[Long]("n_correct"))
+  }
+
   test("naive bayes: accuracy at least majority-class rate") {
     val conf = MlPipelines.naiveBayesMllib(spark, sf).collect()
     val total = conf.map(_.getAs[Long]("n")).sum
