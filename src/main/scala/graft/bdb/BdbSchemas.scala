@@ -193,8 +193,9 @@ object BdbSchemas {
 
 /** Registers the 23 tables as temp views from a base directory of
   * parquet (`basePath/table-name dir of parquet files`, the reference layout after
-  * its load test) or pipe-separated dataGen CSV
-  * (`gpu_bdb_load_test.py:47-92`: sep '|', no quoting, schema applied).
+  * its load test); pipe-separated dataGen CSV
+  * (`gpu_bdb_load_test.py:47-92`: sep '|', no quoting, schema applied)
+  * is converted to that layout first by [[BdbCatalog.loadTest]].
   */
 object BdbCatalog {
 
@@ -202,13 +203,6 @@ object BdbCatalog {
     BdbSchemas.tables.foreach { t =>
       mark(t, spark.read.schema(BdbSchemas.schema(t))
         .parquet(s"$basePath/$t")).createOrReplaceTempView(t)
-    }
-
-  def registerCsv(spark: SparkSession, basePath: String): Unit =
-    BdbSchemas.tables.foreach { t =>
-      mark(t, spark.read.schema(BdbSchemas.schema(t))
-        .option("sep", "|").option("quote", "")
-        .csv(s"$basePath/$t")).createOrReplaceTempView(t)
     }
 
   /** Register pre-built DataFrames (tests / alternate sources). */

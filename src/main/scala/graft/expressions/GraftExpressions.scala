@@ -31,9 +31,16 @@ object Kernels {
   }
 
   def portableHash60(s: UTF8String): Long = {
+    val b = s.getBytes
+    portableHash60(b, b.length)
+  }
+
+  /** [[portableHash60]] of the bytes `b(0 until len)`. */
+  private def portableHash60(b: Array[Byte], len: Int): Long = {
     val md = md5.get()
     md.reset()
-    val d = md.digest(s.getBytes)
+    md.update(b, 0, len)
+    val d = md.digest()
     // first 15 hex digits = 7.5 bytes: take high 60 bits of the first
     // 8 bytes (hex digit 16 is the low nibble of byte 8)
     var v = 0L
@@ -667,27 +674,34 @@ object Kernels {
     * shingle build). Result is sorted + deduplicated: the bucketed
     * consumers key on the hash anyway, so per-doc distinctness by
     * hash == by string up to 64-bit collisions (the same accepted
-    * risk as the existing xxhash64 bucket key, see
+    * risk as the bucket key, see
     * [[graft.ops.Dedup.commonCountsFromBuckets]]).
     */
   def ngramShingleHashes(words: ArrayData, n: Int)
-      : org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val out = ngramXxhashSorted(words, n)
-    var w = 0
-    var r = 0
-    while (r < out.length) {
-      if (w == 0 || out(r) != out(w - 1)) { out(w) = out(r); w += 1 }
-      r += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      java.util.Arrays.copyOf(out, w))
-  }
+      : org.apache.spark.sql.catalyst.util.GenericArrayData =
+    sortedDistinct(ngramWindowHashes(words, n, xxhash42))
 
-  /** SORTED xxhash64 values of every n-gram window (multiset — one
-    * entry per occurrence). Shared by [[ngramShingleHashes]] (unique
-    * of this) and [[topNgramRun]] (longest equal-run of this).
+  /** [[ngramShingleHashes]] with the ENGINE-PORTABLE md5 hash
+    * ([[portableHash60]]) instead of xxhash64 — for the minhash
+    * family, whose hash values are oracle-replayed (signatures,
+    * hashed-set verify). Sorted + deduplicated, so the result is both
+    * the per-doc distinct shingle-hash set AND the ready-sorted input
+    * of intersect_count_sorted. One md5 per shingle window, no
+    * shingle string ever allocated.
     */
-  private def ngramXxhashSorted(words: ArrayData, n: Int): Array[Long] = {
+  def ngramPortableHashes(words: ArrayData, n: Int)
+      : org.apache.spark.sql.catalyst.util.GenericArrayData =
+    sortedDistinct(ngramWindowHashes(words, n, portableHash60))
+
+  private val xxhash42: (Array[Byte], Int) => Long = (b, len) =>
+    org.apache.spark.sql.catalyst.expressions.XXH64
+      .hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET, len, 42L)
+
+  /** `hash(bytes, len)` of every n-gram window of `words`, unsorted,
+    * one entry per occurrence: the window's words joined by single
+    * spaces, written into a reused per-thread buffer. */
+  private def ngramWindowHashes(words: ArrayData, n: Int,
+      hash: (Array[Byte], Int) => Long): Array[Long] = {
     val m = words.numElements()
     if (m < n) return Array.emptyLongArray
     val k = m - n + 1
@@ -710,12 +724,24 @@ object Kernels {
         len += wb
         j += 1
       }
-      out(i) = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, len, 42L)
+      out(i) = hash(buf, len)
       i += 1
     }
-    java.util.Arrays.sort(out)
     out
+  }
+
+  /** `hs` sorted and deduplicated (in place), as an array value. */
+  private def sortedDistinct(hs: Array[Long])
+      : org.apache.spark.sql.catalyst.util.GenericArrayData = {
+    java.util.Arrays.sort(hs)
+    var w = 0
+    var r = 0
+    while (r < hs.length) {
+      if (w == 0 || hs(r) != hs(w - 1)) { hs(w) = hs(r); w += 1 }
+      r += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      java.util.Arrays.copyOf(hs, w))
   }
 
   /** Count of the most frequent n-gram within ONE document's word
@@ -727,7 +753,8 @@ object Kernels {
     * risk class as the bucket keys (~windows^2/2^64 per doc).
     */
   def topNgramRun(words: ArrayData, n: Int): Long = {
-    val hs = ngramXxhashSorted(words, n)
+    val hs = ngramWindowHashes(words, n, xxhash42)
+    java.util.Arrays.sort(hs)
     var best = 0L
     var run = 0L
     var i = 0
@@ -739,69 +766,14 @@ object Kernels {
     best
   }
 
-  /** [[ngramShingleHashes]] with the ENGINE-PORTABLE md5 hash
-    * ([[portableHash60]]) instead of xxhash64 — for the minhash
-    * family, whose hash values are oracle-replayed (signatures,
-    * hashed-set verify). Sorted + deduplicated, so the result is both
-    * the per-doc distinct shingle-hash set AND the ready-sorted input
-    * of intersect_count_sorted. One md5 per shingle window, no
-    * shingle string ever allocated.
-    */
-  def ngramPortableHashes(words: ArrayData, n: Int)
-      : org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val m = words.numElements()
-    if (m < n)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.emptyLongArray)
-    val k = m - n + 1
-    val out = new Array[Long](k)
-    var buf = shingleBuf.get()
-    val md = md5.get()
-    var i = 0
-    while (i < k) {
-      var len = 0
-      var j = 0
-      while (j < n) {
-        val w = words.getUTF8String(i + j)
-        val wb = w.numBytes()
-        if (len + wb + 1 > buf.length) {
-          buf = java.util.Arrays.copyOf(buf,
-            Integer.highestOneBit(len + wb + 1) << 1)
-          shingleBuf.set(buf)
-        }
-        if (j > 0) { buf(len) = ' '.toByte; len += 1 }
-        w.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + len)
-        len += wb
-        j += 1
-      }
-      md.reset()
-      md.update(buf, 0, len)
-      val d = md.digest()
-      var v = 0L
-      var b = 0
-      while (b < 8) { v = (v << 8) | (d(b) & 0xffL); b += 1 }
-      out(i) = v >>> 4
-      i += 1
-    }
-    java.util.Arrays.sort(out)
-    var w = 0
-    var r = 0
-    while (r < k) {
-      if (w == 0 || out(r) != out(w - 1)) { out(w) = out(r); w += 1 }
-      r += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      java.util.Arrays.copyOf(out, w))
-  }
-
   /** All k MinHash signature values in one pass over a doc's
     * portable-hash shingle set: sig_i = min over shingles of
     * ((h % P) * c_i + d_i) % P with the [[graft.ops.Dedup]] affine
-    * family — value-identical to the 64-column min aggregate over the
-    * exploded shingle stream (which pays a full exchange + 64 agg
-    * buffers per doc). Input must be non-empty (callers filter
-    * zero-shingle docs, mirroring their absence from the exploded
-    * groupBy).
+    * family — the values of the oracles' `MIN(...) GROUP BY doc_id`
+    * over the exploded shingles, without the exchange or the k
+    * aggregate buffers per doc. Input must be non-empty (callers
+    * filter zero-shingle docs, mirroring their absence from the
+    * oracles' groupBy).
     */
   def minhashSigs(hashes: ArrayData, cs: Array[Long], ds: Array[Long])
       : org.apache.spark.sql.catalyst.util.GenericArrayData = {

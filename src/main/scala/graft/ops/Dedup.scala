@@ -9,13 +9,20 @@ import org.apache.spark.sql.functions._
   * (shingle → k-min signature → banded buckets → candidate pairs →
   * exact-Jaccard verify), SimHash, n-gram Jaccard.
   *
-  * All hashes are the engine-portable md5-based 60-bit hash
-  * ([[Text.portableHash]]) so a SQL oracle can reproduce every stage.
+  * Every shingle consumer reads ONE shape: a per-doc frame `(id, hs)`
+  * where `hs` is the doc's sorted, distinct shingle-hash array, built
+  * by one kernel pass over the doc's words. Two hash contracts:
+  *  - PORTABLE ([[ngramPortableHashArrays]], the md5-based 60-bit
+  *    [[Text.portableHash]]) wherever the hash VALUES are replayed by
+  *    a SQL oracle: minhash signatures, the verify and prefix stages;
+  *  - xxhash64 ([[ngramShingleHashes]]) where the hash is only a
+  *    bucket or join key that never reaches a result: the all-pairs
+  *    bucket family and the decontamination joins.
   *
   * 100 TB design: every stage is linear except candidate-pair
   * generation, which is confined to LSH band buckets (shuffle by
-  * band hash, pairs only within a bucket). Signatures are one
-  * map-side-combinable aggregation over the shingle explode; no
+  * band hash, pairs only within a bucket). Signatures are one kernel
+  * call per doc over its hash array (no aggregate, no exchange); no
   * driver-side state anywhere.
   */
 object Dedup {
@@ -38,7 +45,7 @@ object Dedup {
   /** Canonical bag-of-words key: md5 of the sorted distinct token set.
     * Catches docs that are permutations/repetitions of the same
     * vocabulary — a cheap linear near-dup pass. Empty tokens from
-    * whitespace runs are dropped (the [[wordShingles]] discipline) so
+    * whitespace runs are dropped (the [[withWords]] discipline) so
     * "x y" and "x  y" canonicalize to the SAME key — keeping them
     * would make the key sensitive to exactly the spacing noise a
     * vocabulary-set fingerprint exists to erase.
@@ -47,88 +54,46 @@ object Dedup {
     md5(concat_ws(" ", sort_array(array_distinct(
       filter(split(text, " "), w => length(w) > 0)))))
 
-  /** Distinct word-level 1-shingles per document — deduplicated
-    * NARROW (array_distinct before the explode; id is unique per
-    * input row), so no shuffle. */
-  def wordShingles(df: DataFrame, id: String, text: String): DataFrame =
-    df.select(col(id), explode(array_distinct(
-        filter(split(col(text), " "), w => length(w) > 0))).as("sh"))
-
-  /** Distinct word n-gram shingles per document — built NARROW from
-    * the token array (sequence + transform + element_at), no
-    * positional self-join, and deduplicated narrow too: ZERO shuffles
-    * end to end. (The join formulation shuffles the exploded words
-    * table n-1 times — 8x slower at 5k docs, catastrophically worse
-    * at scale.)
-    */
-  def ngramShingles(df: DataFrame, id: String, text: String, n: Int): DataFrame =
-    // per-doc dedup happens NARROW (array_distinct on the shingle
-    // array INSIDE the explode): (id, sh) rows come out already
-    // distinct, so no shuffle — the .distinct() formulation paid a
-    // full exchange of the shingle stream, by far the largest
-    // intermediate in the dedup family (id is unique per input row,
-    // so per-doc distinct == global distinct)
-    withWords(df, id, text)
-      .select(col(id),
-        explode(array_distinct(shingleExpr(n))).as("sh"))
-
-  /** Distinct word n-gram shingles per doc as their xxhash64 values
-    * (`shh`), built by ONE kernel pass over the token array — no
-    * shingle STRING is ever allocated (2.6M ~25-byte allocations per
-    * scan at sf1 were the dominant cost of the bucketed family's
-    * build). Bit-identical to
-    * `ngramShingles(...).select(id, xxhash64(sh))` up to 64-bit
-    * collisions, which the bucketed consumers already accept
-    * ([[commonCountsFromBuckets]]'s key note). Use for consumers that
-    * bucket on the HASH and never surface the shingle; stages that
-    * need the 60-bit portable hash instead (minhash signatures, the
-    * verify and prefix stages) read [[ngramPortableHashArrays]].
+  /** One row per DOC with its sorted distinct word n-gram shingle
+    * set as xxhash64 values (`hs`), built by ONE kernel pass over the
+    * token array ([[graft.expressions.Kernels.ngramShingleHashes]]) —
+    * no shingle STRING is ever allocated. The bucket-family and
+    * decontamination form: their keys never reach a result, so the
+    * portable-hash discipline does not apply and a 64-bit collision
+    * is the accepted risk ([[commonCountsFromBuckets]]'s key note).
+    * Stages whose hash VALUES are oracle-replayed (minhash signatures,
+    * the verify and prefix stages) read [[ngramPortableHashArrays]].
     */
   def ngramShingleHashes(df: DataFrame, id: String, text: String,
       n: Int): DataFrame =
-    withWords(df, id, text)
-      .select(col(id), explode(graft.expressions.GraftFunctions
-        .ngram_shingle_hashes(col("__w"), n)).as("shh"))
-
-  /** Per-doc distinct shingle-HASH counts, computed NARROW: the size
-    * of the kernel's hash array, read off before any explode — one
-    * scan over the docs, ZERO shuffles, and sizes agree exactly with
-    * what [[ngramShingleHashes]] consumers count. The groupBy form
-    * (`ngramShingleHashes(...).groupBy(id).count()`) pays a full
-    * exchange of the shingle stream, the largest intermediate in the
-    * family, just to count rows per doc. Docs with zero shingles
-    * (shorter than n words) come out with n = 0 instead of being
-    * absent — indistinguishable downstream, since only docs in a
-    * candidate pair (and so holding >= 1 shingle) are looked up. The
-    * single-element explode is a real Generate node, so the kernel
-    * call does not collapse into the words-array projection
-    * ([[withWords]]).
-    */
-  def ngramShingleHashSizes(df: DataFrame, id: String, text: String,
-      n: Int): DataFrame =
-    withWords(df, id, text)
-      .select(col(id), explode(array(
-        size(graft.expressions.GraftFunctions
-          .ngram_shingle_hashes(col("__w"), n)).cast("long"))).as("n"))
+    hashArrays(df, id, text, n,
+      graft.expressions.GraftFunctions.ngram_shingle_hashes)
 
   /** One row per DOC with its sorted distinct PORTABLE shingle-hash
     * set ([[graft.expressions.Kernels.ngramPortableHashes]]) — the
     * minhash family's working form: signatures read it with
-    * [[graft.expressions.MinhashSigsOf]], the hashed-set verify
+    * [[minhashSignatures]], the hashed-set verify
     * consumes it as-is (already sorted for intersect_count_sorted),
     * and sizes are `size(hs)`. Replaces the exploded string-shingle
     * stream + its 3 downstream exchanges (signature agg, hashed-set
     * collect_list, size groupBy) and halves the md5 work (one pass,
-    * not signatures + verify separately). Docs shorter than n words
-    * come out with an EMPTY array — filter size(hs) > 0 where the
-    * exploded form's absence matters (it feeds a groupBy, so such
-    * docs simply had no rows).
+    * not signatures + verify separately).
     */
   def ngramPortableHashArrays(df: DataFrame, id: String, text: String,
       n: Int): DataFrame =
-    withWords(df, id, text).select(col(id),
-      graft.expressions.GraftFunctions
-        .ngram_portable_hashes(col("__w"), n).as("hs"))
+    hashArrays(df, id, text, n,
+      graft.expressions.GraftFunctions.ngram_portable_hashes)
+
+  /** `(id, hs)` from a shingle-hash kernel, for docs with at least n
+    * words: a shorter doc has no shingle and so no row, as in the
+    * oracles' exploded `GROUP BY doc_id`. The filter reads the words
+    * array, not `size(hs)`: a filter on the kernel's output is pushed
+    * below the projection and runs the kernel a second time per doc.
+    */
+  private def hashArrays(df: DataFrame, id: String, text: String, n: Int,
+      kernel: (Column, Int) => Column): DataFrame =
+    withWords(df, id, text).filter(size(col("__w")) >= n)
+      .select(col(id), kernel(col("__w"), n).as("hs"))
 
   /** Exact Jaccard for candidate pairs over the per-doc SORTED hash
     * arrays of [[ngramPortableHashArrays]]:
@@ -204,7 +169,7 @@ object Dedup {
 
   /** Word n-grams WITH multiplicity (one row per occurrence) — the
     * input for repetition analysis, where how often the top n-gram
-    * repeats is the signal ([[ngramShingles]] is this per-doc
+    * repeats is the signal (the hash-array shinglers are this per-doc
     * deduplicated).
     */
   def ngrams(df: DataFrame, id: String, text: String, n: Int): DataFrame =
@@ -262,8 +227,11 @@ object Dedup {
       (c, dd)
     }
 
-  /** MinHash signatures: k affine universal hashes off ONE md5 per
-    * shingle, min per doc (map-side partial min).
+  /** MinHash signatures `id, sig_0..sig_{k-1}` from the per-doc
+    * portable-hash arrays of [[ngramPortableHashArrays]]: one
+    * `minhash_sigs` kernel call per doc
+    * ([[graft.expressions.Kernels.minhashSigs]]) — no shingle explode,
+    * no exchange, no k aggregate buffers.
     *
     * Hash family: g_i(x) = (c_i * h + d_i) mod p with h the shingle's
     * 60-bit portable hash reduced mod p, and per-function constants
@@ -274,26 +242,14 @@ object Dedup {
     * so an 8-row band collides whenever ONE row would — measured
     * 11.3M candidates where J^8-independence predicts ~10^4. A salted-
     * md5-per-i family is independent too but recomputes the digest k
-    * times per shingle row; at k=64 that WAS the signature cost
-    * (measured 3.3 s of d04's sf0.1 time).
-    *
-    * h lands in its own projection before the aggregate so the digest
-    * runs once per row, not once per aggregate expression (same
-    * inline-lambda hazard as the [[ngrams]] note).
+    * times per shingle; at k=64 that WAS the signature cost (measured
+    * 3.3 s of d04's sf0.1 time).
     */
-  def minhashSignatures(shingles: DataFrame, id: String, k: Int): DataFrame = {
-    val coeffs = minhashCoeffs(k)
-    val h = col("__h")
-    shingles
-      .select(col(id),
-        (Text.portableHash(col("sh")) % MinhashPrime).as("__h"))
-      .groupBy(col(id))
-      .agg(min((h * coeffs(0)._1 + coeffs(0)._2) % MinhashPrime).as("sig_0"),
-        (1 until k).map { i =>
-          min((h * coeffs(i)._1 + coeffs(i)._2) % MinhashPrime)
-            .as(s"sig_$i")
-        }: _*)
-  }
+  def minhashSignatures(harr: DataFrame, id: String, k: Int): DataFrame =
+    harr.select(col(id), graft.expressions.GraftFunctions
+        .minhash_sigs(col("hs"), k).as("__sigs"))
+      .select(col(id) +: (0 until k)
+        .map(i => element_at(col("__sigs"), i + 1).as(s"sig_$i")): _*)
 
   /** LSH candidate pairs (id_1 < id_2) from `sig_0..sig_{k-1}`
     * signature columns: band b's key is md5 over its `rowsPerBand`
@@ -337,27 +293,19 @@ object Dedup {
     }.reduce(_ union _)
   }
 
-  /** All-pairs Jaccard over shingle sets, bucket form: pairs sharing
-    * >= 1 (non-heavy) shingle get their common count from
-    * [[commonCountsFromBuckets]], then sizes join in. Use when
-    * candidates ARE "pairs sharing a shingle" — no separate verify
-    * pass needed. Sizes stay uncapped (full |A|, |B|): when the df
-    * cap engages, a boilerplate shingle stops generating pairs but
-    * still counts toward set size, so jaccard is under- (never over-)
-    * estimated for boilerplate-heavy docs — the conservative
-    * direction for dedup.
+  /** All-pairs Jaccard over per-doc shingle-hash arrays `(id, hs)`,
+    * bucket form: pairs sharing >= 1 (non-heavy) shingle get their
+    * common count from [[commonCountsFromBuckets]], then sizes
+    * (`size(hs)`, narrow) join in. Use when candidates ARE "pairs
+    * sharing a shingle" — no separate verify pass needed. Sizes stay
+    * uncapped (full |A|, |B|): when the df cap engages, a boilerplate
+    * shingle stops generating pairs but still counts toward set size,
+    * so jaccard is under- (never over-) estimated for boilerplate-
+    * heavy docs — the conservative direction for dedup.
     */
-  def jaccardAllPairs(shingles: DataFrame, id: String,
-      maxDf: Int = 10000, sizesNarrow: Option[DataFrame] = None,
+  def jaccardAllPairs(harr: DataFrame, id: String, maxDf: Int = 10000,
       thresholdPct: Int = 0): DataFrame = {
-    // callers that derive shingles from a doc table pass the
-    // zero-shuffle [[ngramShingleHashSizes]] projection; the groupBy
-    // fallback keeps the op usable over an arbitrary shingle stream
-    val sizes = sizesNarrow.getOrElse(
-      shingles.groupBy(col(id)).agg(count(lit(1)).as("n")))
-    val counted = commonCountsFromBuckets(shingles, id, maxDf)
-      .join(sizes.as("za"), col("id_1") === col(s"za.$id"))
-      .join(sizes.as("zb"), col("id_2") === col(s"zb.$id"))
+    val counted = withSizes(harr, id, maxDf)
     thresholded(counted, col("za.n") + col("zb.n") - col("n_common"),
       thresholdPct)
       .select(col("id_1"), col("id_2"),
@@ -365,20 +313,15 @@ object Dedup {
           (col("za.n") + col("zb.n") - col("n_common"))).as("jaccard"))
   }
 
-  /** All-pairs asymmetric containment over shingle sets, same bucket
+  /** All-pairs asymmetric containment over `(id, hs)`, same bucket
     * shape as [[jaccardAllPairs]]: c_1in2 = |A∩B|/|A|
     * detects doc 1 CONTAINED in doc 2 (quotation, boilerplate wrap,
     * partial scrape) even when symmetric Jaccard is low because the
     * container is much larger — the subset-dup case Jaccard misses.
     */
-  def containmentAllPairs(shingles: DataFrame, id: String,
-      maxDf: Int = 10000, sizesNarrow: Option[DataFrame] = None,
-      minMaxContainmentPct: Int = 0): DataFrame = {
-    val sizes = sizesNarrow.getOrElse(
-      shingles.groupBy(col(id)).agg(count(lit(1)).as("n")))
-    val counted = commonCountsFromBuckets(shingles, id, maxDf)
-      .join(sizes.as("za"), col("id_1") === col(s"za.$id"))
-      .join(sizes.as("zb"), col("id_2") === col(s"zb.$id"))
+  def containmentAllPairs(harr: DataFrame, id: String,
+      maxDf: Int = 10000, minMaxContainmentPct: Int = 0): DataFrame = {
+    val counted = withSizes(harr, id, maxDf)
     // greatest(c_1in2, c_2in1) >= p/100 over positive denominators is
     // exactly 100*n_common >= p*least(|A|,|B|) — the [[thresholded]]
     // integer-space equivalence, applied to the smaller set size
@@ -390,6 +333,17 @@ object Dedup {
       .select(col("id_1"), col("id_2"), col("n_common"),
         (col("n_common").cast("double") / col("za.n")).as("c_1in2"),
         (col("n_common").cast("double") / col("zb.n")).as("c_2in1"))
+  }
+
+  /** [[commonCountsFromBuckets]] with both docs' set sizes joined in
+    * as `za.n`, `zb.n`. The sizes are `size(hs)`, a narrow projection
+    * of the same arrays: no groupBy over the shingle stream. */
+  private def withSizes(harr: DataFrame, id: String,
+      maxDf: Int): DataFrame = {
+    val sizes = harr.select(col(id), size(col("hs")).as("n"))
+    commonCountsFromBuckets(harr, id, maxDf)
+      .join(sizes.as("za"), col("id_1") === col(s"za.$id"))
+      .join(sizes.as("zb"), col("id_2") === col(s"zb.$id"))
   }
 
   /** Prefix-filtered candidate pairs for an EXACT high-threshold
@@ -448,9 +402,8 @@ object Dedup {
     *    shape.
     *
     * Neither path takes per-doc sizes from a groupBy over the shingle
-    * stream: the prefix path reads `size(hs)` off the hash arrays, the
-    * bucket path the zero-shuffle [[ngramShingleHashSizes]]
-    * projection. The 60 crossover: prefix length is
+    * stream: both read `size(hs)` off the per-doc hash arrays. The 60
+    * crossover: prefix length is
     * n - ceil(t*n) + 1, so below t=0.6 more than ~40% of each doc's
     * shingles still enter buckets AND the verify stage joins the full
     * hashed-set arrays per surviving pair — measured slower than the
@@ -471,24 +424,25 @@ object Dedup {
         // set is order-invariant (AllPairs theorem), so the (df, h)
         // tie-break replaces (df, sh) and no shingle string is built
         // the array table feeds prefix (df + window) and verify
-        val harr = Materialize(
-          ngramPortableHashArrays(docTable, id, text, n)
-            .filter(size(col("hs")) > 0))
+        val harr = Materialize(ngramPortableHashArrays(docTable, id, text, n))
         jaccardVerifyHashArrays(
           prefixFilteredCandidatesHashed(harr, id, tPct), harr, id,
           minJaccardPct = tPct, thresholdPct = tPct)
       } else
-        // bucket path: kernel-hashed shingles (no string allocs)
+        // bucket path on xxhash arrays (no string allocs), not
+        // materialized: the bucket stream and the sizes each scan the
+        // doc table once, and a Materialize would add an eager job
         jaccardAllPairs(ngramShingleHashes(docTable, id, text, n), id,
-          maxDf, Some(ngramShingleHashSizes(docTable, id, text, n)),
-          thresholdPct = tPct)
+          maxDf, thresholdPct = tPct)
     pairs.select(col("id_1").as("u"), col("id_2").as("v"))
   }
 
-  /** Common-shingle counts per doc pair via shingle BUCKETS, with a
-    * built-in document-frequency cap.
+  /** Common-shingle counts per doc pair via shingle BUCKETS over the
+    * per-doc hash arrays `(id, hs)`, with a built-in document-frequency
+    * cap. `hs` must be distinct per doc (both array shinglers are).
     *
-    * One shuffle (groupBy sh) collects each shingle's doc list; pairs
+    * One shuffle (groupBy on the exploded hash) collects each
+    * shingle's doc list; pairs
     * then stream out of two chained explodes within the bucket — the
     * same (pair, shingle) row set the shingle-equality self-join
     * produces, minus the join build and the second shuffle of the
@@ -507,22 +461,17 @@ object Dedup {
     * the cap is a no-op (max observed df is 25 at sf0.1), so results
     * are identical to the uncapped self-join.
     */
-  def commonCountsFromBuckets(shingles: DataFrame, id: String,
+  def commonCountsFromBuckets(harr: DataFrame, id: String,
       maxDf: Int): DataFrame = {
-    // bucket key is xxhash64(sh), not the shingle string: the key
-    // never reaches a result (buckets exist only to pair ids), so the
-    // engine-portable hash discipline doesn't apply, and shuffling 8
-    // fixed bytes per row instead of a 20-40 byte string shrinks the
+    // bucket key is the shingle's hash, not its string: the key never
+    // reaches a result (buckets exist only to pair ids), and shuffling
+    // 8 fixed bytes per row instead of a 20-40 byte string shrinks the
     // family's largest exchange. A cross-doc collision would merge
     // two buckets and over-count one pair by 1 — probability
     // ~ S^2/2^64 for S distinct shingles, the same accepted risk as
-    // the hashed-set verify path. A stream from
-    // [[ngramShingleHashes]] arrives pre-hashed (`shh`) and skips
-    // the hash here too.
-    val key =
-      if (shingles.columns.contains("shh")) col("shh")
-      else xxhash64(col("sh"))
-    val buckets = shingles.groupBy(key.as("shh"))
+    // the hashed-set verify path.
+    val buckets = harr.select(col(id), explode(col("hs")).as("h"))
+      .groupBy(col("h"))
       .agg(collect_list(col(id)).as("ids"))
     val guarded = Metrics
       .observeDropped(buckets, "dedup_df_cap", size(col("ids")) > maxDf)

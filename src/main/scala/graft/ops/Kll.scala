@@ -33,7 +33,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * is not SQL-expressible.
   *
   * Buffer layout (flat Array[Long], ExpressionEncoder like
-  * [[MinHashAgg]]/[[CmsAgg]]):
+  * [[CmsAgg]]/[[KmvAgg]]):
   * {{{
   * [0] = header: format version (high 32 bits) | k (low 32 bits)
   * [1] = L (#levels)

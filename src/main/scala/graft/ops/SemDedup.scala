@@ -114,14 +114,10 @@ object SemDedup {
   // Small-k: kernel literals (the gated-scale fast path).
   // ------------------------------------------------------------------
 
-  /** Collect the k-bounded centroid set and assign via the argmax_cos
-    * kernel: one narrow pass per vector, query norm hoisted, no join
+  /** Assign via the argmax_cos kernel from already-collected
+    * (cid, cvec) rows — what [[assignCos]]'s single bounded collect
+    * feeds: one narrow pass per vector, query norm hoisted, no join
     * (vs ~6 s of n*k row plumbing for the join form at sf1). */
-  def assignCosLiteral(e: DataFrame, cents: DataFrame): DataFrame =
-    assignCosLiteralRows(e, cents.select("cid", "cvec").collect())
-
-  /** Kernel assignment from already-collected (cid, cvec) rows —
-    * what [[assignCos]]'s single bounded collect feeds. */
   def assignCosLiteralRows(e: DataFrame,
       rows: Array[org.apache.spark.sql.Row]): DataFrame = {
     // An empty centroid set would otherwise surface as a bare
@@ -147,20 +143,12 @@ object SemDedup {
       col("embedding"))
   }
 
-  /** Collect the k-bounded centroid PQ codes and assign via the
-    * pq_assign_adc kernel (per-vector M*K LUT built in-kernel, code
-    * matrix scanned in place — the broadcast-join form of the same
-    * argmin copies the LUT into every joined row, measured 14.4 s of
-    * pure row copy at sf1 vs ~0.5 s for the kernel). */
-  def assignAdcLiteral(e: DataFrame, cents: DataFrame): DataFrame = {
-    import graft.expressions.GraftFunctions.pq_encode
-    assignAdcLiteralRows(e, cents
-      .select(col("cid"), pq_encode(col("cvec")).as("ccodes"))
-      .collect())
-  }
-
-  /** Kernel assignment from already-collected (cid, ccodes) rows —
-    * what [[assignAdc]]'s single bounded collect feeds. */
+  /** Assign via the pq_assign_adc kernel from already-collected
+    * (cid, ccodes) rows — what [[assignAdc]]'s single bounded collect
+    * feeds (per-vector M*K LUT built in-kernel, code matrix scanned in
+    * place — the broadcast-join form of the same argmin copies the
+    * LUT into every joined row, measured 14.4 s of pure row copy at
+    * sf1 vs ~0.5 s for the kernel). */
   def assignAdcLiteralRows(e: DataFrame,
       rows: Array[org.apache.spark.sql.Row]): DataFrame = {
     import graft.expressions.GraftFunctions.pq_assign_adc

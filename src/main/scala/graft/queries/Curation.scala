@@ -18,6 +18,13 @@ object CurationQueries extends Suite {
   private def docs(s: SparkSession, d: String): DataFrame =
     Tables.load(s, d, "documents")
 
+  /** `doc_id, sh`: each doc's distinct word 3-gram shingles as their
+    * xxhash64 values, one row per shingle — the decontamination join
+    * key of a11, d38 and a24. */
+  private def shingleHashes(docs: DataFrame): DataFrame =
+    Dedup.ngramShingleHashes(docs, "doc_id", "text", 3)
+      .select(col("doc_id"), explode(col("hs")).as("sh"))
+
   /** Portable salted 60-bit hash in DuckDB (mirror of
     * Text.saltedHash / Split.bucket's salting). */
   private def hSql(e: String, salt: String): String =
@@ -342,8 +349,10 @@ object CurationQueries extends Suite {
     // eval shingle set is small by construction — Catalyst broadcasts
     // it, so the train-side scan never shuffles; at 100 TB this is a
     // bloom/broadcast-semi-join against the eval n-gram dictionary.
+    // Shingles join as their xxhash64 values (the key never reaches
+    // the result; a 64-bit collision is the accepted risk).
     Q("a11_contamination", (s, d) => {
-      val sh = Dedup.ngramShingles(docs(s, d), "doc_id", "text", 3)
+      val sh = shingleHashes(docs(s, d))
       val evalSh = sh.filter(col("doc_id") % 100 === 0)
         .select("sh").distinct()
       sh.filter(col("doc_id") % 100 =!= 0)
@@ -384,7 +393,7 @@ object CurationQueries extends Suite {
     // clean ppm) a curation run logs.
     Q("d38_bloom_decontaminate", (s, d) => {
       val base = docs(s, d)
-      val sh = Dedup.ngramShingles(base, "doc_id", "text", 3)
+      val sh = shingleHashes(base)
       val evalSh = sh.filter(col("doc_id") % 100 === 0)
         .select(col("sh").as("ev_sh")).distinct()
       val trainSh = sh.filter(col("doc_id") % 100 =!= 0)
@@ -997,7 +1006,7 @@ object CurationQueries extends Suite {
       val keep = corpus
         .select(Text.fingerprint(col("text")).as("fp"), col("doc_id"))
         .groupBy("fp").agg(min("doc_id").as("keep_id"))
-      val sh = Dedup.ngramShingles(docs(s, d), "doc_id", "text", 3)
+      val sh = shingleHashes(docs(s, d))
       val evalSh = sh.filter(col("doc_id") % 100 === 0)
         .select("sh").distinct()
       val contam = sh.filter(col("doc_id") % 100 =!= 0)

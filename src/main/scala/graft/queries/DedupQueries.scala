@@ -28,8 +28,8 @@ object DedupQueries extends Suite {
     * so P(candidate) ~ 99% at j=0.9 but only ~3% at j=0.5. The old
     * K=8/r=2 shape (midpoint ~0.5) passed 99.9% false candidates to
     * the verify join — harmless at 5k docs, but candidate volume IS
-    * the job at 10^9 docs. Public because d13's typed-Aggregator
-    * variant must produce the identical signature width.
+    * the job at 10^9 docs. Public because d13 (Extras) shares d03's
+    * oracle and so its signature width.
     */
   val MinhashK = 64
   val MinhashRowsPerBand = 8 // → 8 bands
@@ -72,7 +72,8 @@ object DedupQueries extends Suite {
     * [[OracleFragments.hash60]]. */
   private def hSqlPlain(e: String): String = OracleFragments.hash60(e)
 
-  /** Distinct word shingles per doc (mirror of Dedup.wordShingles). */
+  /** Distinct word shingles per doc (mirror of the n=1
+    * [[Dedup.ngramPortableHashArrays]] sets d03 signs). */
   private def wordShinglesSql(src: String): String =
     s"""ws AS (
        |  SELECT DISTINCT doc_id, w AS sh FROM (
@@ -80,8 +81,8 @@ object DedupQueries extends Suite {
        |  WHERE len(w) > 0)""".stripMargin
   private val WordShinglesSql = wordShinglesSql("documents")
 
-  /** Distinct word-3-gram shingles per doc (mirror of
-    * Dedup.ngramShingles(_, _, _, 3) — same fragment as d05's oracle).
+  /** Distinct word-3-gram shingles per doc (the string form of the
+    * n=3 hash-array shinglers — same fragment as d05's oracle).
     * The near-dup pipelines shingle on 3-grams, not single words: the
     * synthetic corpus has a ~31-word vocabulary, so unigram shingle
     * sets of RANDOM doc pairs overlap at jaccard ~0.6+ and candidate
@@ -136,17 +137,6 @@ object DedupQueries extends Suite {
     "bands AS (\n  " + bands.mkString("\n  UNION ALL\n  ") + ")"
   }
 
-  /** `doc_id, sig_0..sig_{K-1}`: MinHash signatures from the
-    * `minhash_sigs` kernel over the sorted portable-hash arrays of
-    * [[Dedup.ngramPortableHashArrays]] — the same values as
-    * [[Dedup.minhashSignatures]] over the string shingles ([[sigSelect]]
-    * is the oracle of both), one kernel call per doc, no aggregate. */
-  private def minhashSigCols(harr: DataFrame): DataFrame =
-    harr.select(col("doc_id"), graft.expressions.GraftFunctions
-        .minhash_sigs(col("hs"), K).as("sigs"))
-      .select(col("doc_id") +: (0 until K)
-        .map(i => element_at(col("sigs"), i + 1).as(s"sig_$i")): _*)
-
   /** Cosine between two embedding columns, double-accumulated and
     * rounded to 6 (mirror of Similarity.cosine). */
   private[queries] def cosSql(a: String, b: String): String = {
@@ -181,11 +171,14 @@ object DedupQueries extends Suite {
              |FROM documents GROUP BY 1 HAVING COUNT(*) >= 2
              |ORDER BY keep_id""".stripMargin)),
 
-    // D3: minhash signatures (k salted portable hashes over the word
-    // shingle set) — verifies the whole signature pipeline per doc.
+    // D3: minhash signatures (K affine hashes over the portable hash
+    // of each word shingle) — verifies the whole signature pipeline
+    // per doc. Word shingles are the n=1 hash arrays; a doc with no
+    // word has no array and, as in the oracle, no signature.
     Q("d03_minhash_sigs", (s, d) =>
       Dedup.minhashSignatures(
-          Dedup.wordShingles(docs(s, d), "doc_id", "text"), "doc_id", K)
+          Dedup.ngramPortableHashArrays(docs(s, d), "doc_id", "text", 1),
+          "doc_id", K)
         .orderBy("doc_id"),
       Some(s"WITH $WordShinglesSql,\n${sigSelect("ws")}\n" +
         "SELECT * FROM sigs ORDER BY doc_id")),
@@ -204,12 +197,11 @@ object DedupQueries extends Suite {
       // hashed-set collect_list / size groupBy exchanges all
       // disappear (each was a full pass over the exploded stream).
       val harr = Materialize(
-        Dedup.ngramPortableHashArrays(base, "doc_id", "text", 3)
-          .filter(size(col("hs")) > 0)) // mirror the exploded form's absence
+        Dedup.ngramPortableHashArrays(base, "doc_id", "text", 3))
       // exactly-once candidates: no global distinct over the 2.3x-
       // duplicated pair stream (see lshCandidatesOnce scaladoc)
-      val cands = Dedup.lshCandidatesOnce(minhashSigCols(harr), "doc_id",
-        K, RowsPerBand)
+      val cands = Dedup.lshCandidatesOnce(
+        Dedup.minhashSignatures(harr, "doc_id", K), "doc_id", K, RowsPerBand)
       // raw jaccard, not round-6: the ratio of exact ints is
       // bit-identical across engines, while rounding can flip when a
       // rational lands exactly on a 1e-6 boundary (e.g. k/640)
@@ -253,20 +245,14 @@ object DedupQueries extends Suite {
       // on testdata (max observed df 25 at sf0.1); drops are logged
       // via observed metric. (The candidates-then-reverify form
       // re-joins the shingle table twice more — measured 5x slower.)
-      // per-doc sizes come from the zero-shuffle narrow projection —
-      // the groupBy form re-evaluated the whole shingle pipeline just
-      // to count rows per doc
-      // shingles enter as kernel-built HASHES (ngram_shingle_hashes):
-      // buckets key on the hash anyway, and never allocating the
-      // shingle strings is the family's biggest build saving
-      val base = docs(s, d)
-      val sh = Dedup.ngramShingleHashes(base, "doc_id", "text", 3)
-      val sizes = Dedup.ngramShingleHashSizes(base, "doc_id", "text", 3)
+      // Shingles enter as kernel-built xxhash arrays: buckets key on
+      // the hash anyway, sizes are size(hs), and no shingle string is
+      // ever allocated
+      val harr = Dedup.ngramShingleHashes(docs(s, d), "doc_id", "text", 3)
       // thresholdPct: the >= 0.1 gate in exact integer space inside
       // the op (same row set — see Dedup.thresholded); the output
       // jaccard doubles are computed only for survivors
-      Dedup.jaccardAllPairs(sh, "doc_id", sizesNarrow = Some(sizes),
-          thresholdPct = 10)
+      Dedup.jaccardAllPairs(harr, "doc_id", thresholdPct = 10)
         .orderBy("id_1", "id_2")
     },
       Some(s"""WITH ${ngram3ShinglesSql("documents")},
@@ -726,15 +712,12 @@ object DedupQueries extends Suite {
     // union. Same one-self-join shape (and cost) as d05.
     Q("d20_containment", (s, d) => {
       // same bucket shape + df cap as d05 (no-op on testdata), same
-      // zero-shuffle narrow sizes, same kernel-hashed shingles
-      val base20 = docs(s, d)
-      val sh = Dedup.ngramShingleHashes(base20, "doc_id", "text", 3)
+      // kernel-hashed shingle arrays
+      val harr = Dedup.ngramShingleHashes(docs(s, d), "doc_id", "text", 3)
       // minMaxContainmentPct: greatest(c_1in2, c_2in1) >= 0.5 as the
       // exact integer 2*n_common >= least(|A|,|B|) inside the op —
       // same row set, hot compare stays in codegen long space
-      Dedup.containmentAllPairs(sh, "doc_id",
-          sizesNarrow = Some(Dedup.ngramShingleHashSizes(base20, "doc_id", "text", 3)),
-          minMaxContainmentPct = 50)
+      Dedup.containmentAllPairs(harr, "doc_id", minMaxContainmentPct = 50)
         .orderBy("id_1", "id_2")
     },
       Some(s"""WITH ${ngram3ShinglesSql("documents")},
@@ -765,11 +748,10 @@ object DedupQueries extends Suite {
       val base = docs(s, d).filter(col("doc_id") < 1000)
       // signatures, prune sizes and both verify sides read the arrays
       val harr = Materialize(
-        Dedup.ngramPortableHashArrays(base, "doc_id", "text", 3)
-          .filter(size(col("hs")) > 0))
+        Dedup.ngramPortableHashArrays(base, "doc_id", "text", 3))
       // three consumers (the band table, est join x2) — one row per
       // doc, materialize instead of re-running the signature kernel
-      val sigs = Materialize(minhashSigCols(harr))
+      val sigs = Materialize(Dedup.minhashSignatures(harr, "doc_id", K))
       val cands = Dedup.lshCandidatesOnce(sigs, "doc_id", K, RowsPerBand)
       val nMatch = (0 until K).map(i =>
         when(col(s"a.sig_$i") === col(s"b.sig_$i"), 1).otherwise(0))
@@ -1049,8 +1031,7 @@ object DedupQueries extends Suite {
       // internal (the oracle is the brute-force join, and AllPairs
       // is exact under any total order)
       val harr = Materialize(
-        Dedup.ngramPortableHashArrays(docs(s, d), "doc_id", "text", 3)
-          .filter(size(col("hs")) > 0))
+        Dedup.ngramPortableHashArrays(docs(s, d), "doc_id", "text", 3))
       val cands = Dedup.prefixFilteredCandidatesHashed(harr, "doc_id", 80)
       Dedup.jaccardVerifyHashArrays(cands, harr, "doc_id",
           minJaccardPct = 80)

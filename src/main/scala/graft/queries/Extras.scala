@@ -488,21 +488,16 @@ object Extras extends Suite {
              | AND sg.tsu <= p.tsu AND sg.tsu >= p.tsu - 3600000000
              |ORDER BY purchase_id, signup_id""".stripMargin)),
 
-    // MinHash via the typed Aggregator (one k-long buffer per group) —
-    // same oracle as the k-min-columns form d03 (width tracks
-    // DedupQueries.MinhashK so the two stay interchangeable).
-    Q("d13_minhash_aggregator", (s, d) => {
-      import s.implicits._
-      val k = DedupQueries.MinhashK
-      val agg = udaf(new graft.ops.MinHashAgg(k))
-      val sh = graft.ops.Dedup.wordShingles(
-        Tables.load(s, d, "documents"), "doc_id", "text")
-      val withSigs = sh.groupBy("doc_id")
-        .agg(agg(col("sh")).as("sigs"))
-      (0 until k).foldLeft(withSigs) { (df, i) =>
-        df.withColumn(s"sig_$i", element_at(col("sigs"), i + 1))
-      }.drop("sigs").orderBy("doc_id")
-    },
+    // MinHash word signatures under d03's oracle, through the one
+    // signature operator (the minhash_sigs kernel over the n=1
+    // portable-hash arrays); the name stays for the gate. The
+    // typed-Aggregator API is exercised by HllAgg (d14), CmsAgg,
+    // KmvAgg and the KLL aggregators.
+    Q("d13_minhash_aggregator", (s, d) =>
+      graft.ops.Dedup.minhashSignatures(graft.ops.Dedup
+          .ngramPortableHashArrays(Tables.load(s, d, "documents"),
+            "doc_id", "text", 1), "doc_id", DedupQueries.MinhashK)
+        .orderBy("doc_id"),
       Some(DedupQueries.oracles("d03_minhash_sigs"))),
 
     // HLL sketch via the typed Aggregator — the estimate itself is

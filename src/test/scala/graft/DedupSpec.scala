@@ -1,10 +1,12 @@
 package graft
 
 import graft.ops.{Dedup, Similarity}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
+  import DedupSpec.{jaccardPairs, minhashReference, ngramShingles}
 
   test("exact dedup groups identical-after-normalization docs") {
     val df = Seq(
@@ -19,7 +21,7 @@ class DedupSpec extends SparkSpec {
     val df = Seq((1L, "a b c d e"), (2L, "e d c b a"), (3L, "x y z w v"))
       .toDF("doc_id", "text")
     val sigs = Dedup.minhashSignatures(
-      Dedup.wordShingles(df, "doc_id", "text"), "doc_id", 8)
+      Dedup.ngramPortableHashArrays(df, "doc_id", "text", 1), "doc_id", 8)
       .orderBy("doc_id").collect()
     val s1 = sigs(0).toSeq.tail
     val s2 = sigs(1).toSeq.tail
@@ -28,16 +30,34 @@ class DedupSpec extends SparkSpec {
     assert(s1 !== s3)       // disjoint vocab
   }
 
+  test("minhashSignatures on word arrays == driver-side reference; " +
+    "a doc without words has no signature") {
+    val docs = Seq((1L, "b a  b c"), (2L, "  lead  and   trail  "),
+      (3L, "x x x x"), (4L, ""), (5L, "   "), (6L, null),
+      (7L, "a b c b a"))
+      .toDF("doc_id", "text")
+    val k = 16
+    val got = Dedup.minhashSignatures(
+        Dedup.ngramPortableHashArrays(docs, "doc_id", "text", 1), "doc_id", k)
+      .collect().map(r => r.getLong(0) -> (1 to k).map(r.getLong)).toMap
+    val expected = docs.collect()
+      .filter(r => !r.isNullAt(1))
+      .map(r => r.getLong(0) ->
+        r.getString(1).split(" ").filter(_.nonEmpty).distinct.toSeq)
+      .filter(_._2.nonEmpty)
+      .map { case (id, ws) => id -> minhashReference(ws, k) }.toMap
+    assert(expected.keySet === Set(1L, 2L, 3L, 7L))
+    assert(got === expected)
+    assert(got(1L) === got(7L)) // same word set {a, b, c}
+  }
+
   test("LSH buckets identical docs together; jaccard verify = 1.0") {
     val df = Seq((1L, "a b c d e f g h"), (2L, "a b c d e f g h"),
       (3L, "q r s t u v w x")).toDF("doc_id", "text")
     val harr = Dedup.ngramPortableHashArrays(df, "doc_id", "text", 1)
     val k = 8
-    val sigs = harr.select(col("doc_id"), graft.expressions.GraftFunctions
-        .minhash_sigs(col("hs"), k).as("s"))
-      .select(col("doc_id") +: (0 until k)
-        .map(i => element_at(col("s"), i + 1).as(s"sig_$i")): _*)
-    val cands = Dedup.lshCandidatesOnce(sigs, "doc_id", k, 2)
+    val cands = Dedup.lshCandidatesOnce(
+      Dedup.minhashSignatures(harr, "doc_id", k), "doc_id", k, 2)
     val verified = Dedup.jaccardVerifyHashArrays(cands, harr, "doc_id")
       .collect()
     assert(verified.length === 1)
@@ -219,15 +239,14 @@ class DedupSpec extends SparkSpec {
         .select("id_1", "id_2").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val harr = Dedup.ngramPortableHashArrays(docsDf, "doc_id", "text", 3)
-      .filter(size(col("hs")) > 0).localCheckpoint()
+      .localCheckpoint()
     val prefixCands = Dedup.prefixFilteredCandidatesHashed(harr, "doc_id", 80)
       .localCheckpoint()
     // ground truth: every pair sharing a string shingle, exact jaccard
-    val full = Dedup.jaccardAllPairs(
-      Dedup.ngramShingles(docsDf, "doc_id", "text", 3), "doc_id")
+    val full = jaccardPairs(ngramShingles(docsDf, "doc_id", "text", 3))
       .localCheckpoint()
     // exactness: verifying the pruned candidates finds the identical
-    // qualifying pair set the full bucket join finds
+    // qualifying pair set the string-shingle self-join finds
     val qualifying = pairSet(full)
     assert(qualifying.nonEmpty)
     assert(pairSet(Dedup.jaccardVerifyHashArrays(prefixCands, harr,
@@ -245,21 +264,18 @@ class DedupSpec extends SparkSpec {
     val docsDf = Tables.load(spark, sf, "documents")
     def edgeSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // t=0.8 routes through the AllPairs prefix filter; the same
-    // threshold applied to the full bucket join is the ground truth
+    // t=0.8 routes through the AllPairs prefix filter, t=0.1 through
+    // the hash-array bucket join; the ground truth for both is the
+    // same threshold over the string-shingle self-join
+    val truth = jaccardPairs(ngramShingles(docsDf, "doc_id", "text", 3))
+      .localCheckpoint()
+    def truthAt(t: Double) = edgeSet(truth.filter(col("jaccard") >= t)
+      .select(col("id_1").as("u"), col("id_2").as("v")))
     val viaPrefix = edgeSet(Dedup.dupEdges(docsDf, "doc_id", "text", 3,
       tPct = 80))
-    val sh = Dedup.ngramShingles(docsDf, "doc_id", "text", 3)
-    val viaBuckets = edgeSet(Dedup.jaccardAllPairs(sh, "doc_id")
-      .filter(col("jaccard") >= 0.8)
-      .select(col("id_1").as("u"), col("id_2").as("v")))
-    assert(viaPrefix === viaBuckets)
-    // the low-threshold route is the bucket join itself
+    assert(viaPrefix.nonEmpty && viaPrefix === truthAt(0.8))
     val lo = edgeSet(Dedup.dupEdges(docsDf, "doc_id", "text", 3, tPct = 10))
-    val loTruth = edgeSet(Dedup.jaccardAllPairs(sh, "doc_id")
-      .filter(col("jaccard") >= 0.1)
-      .select(col("id_1").as("u"), col("id_2").as("v")))
-    assert(lo === loTruth)
+    assert(lo === truthAt(0.1))
   }
 
   test("integer threshold (100*n >= p*union) == double jaccard/" +
@@ -286,7 +302,7 @@ class DedupSpec extends SparkSpec {
     val a = (0 until 9).map(i => s"a$i").mkString(" ") + " s0 s1"
     val b = (0 until 9).map(i => s"b$i").mkString(" ") + " s0 s1"
     val docsDf = Seq((1L, a), (2L, b)).toDF("doc_id", "text")
-    val sh = Dedup.wordShingles(docsDf, "doc_id", "text")
+    val sh = Dedup.ngramShingleHashes(docsDf, "doc_id", "text", 1)
     def pairs(df: org.apache.spark.sql.DataFrame) = df
       .select("id_1", "id_2").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -305,7 +321,7 @@ class DedupSpec extends SparkSpec {
     // also check a pair sitting strictly BELOW 0.5 on both sides
     val docs2 = Seq((3L, "s0 s1 c0 c1"), (4L, "s0 s1"),
       (5L, "s0 e0 e1 e2 e3")).toDF("doc_id", "text")
-    val sh2 = Dedup.wordShingles(docs2, "doc_id", "text")
+    val sh2 = Dedup.ngramShingleHashes(docs2, "doc_id", "text", 1)
     assert(pairs(Dedup.containmentAllPairs(sh2, "doc_id",
         minMaxContainmentPct = 50))
       === pairs(Dedup.containmentAllPairs(sh2, "doc_id")
@@ -339,8 +355,8 @@ class DedupSpec extends SparkSpec {
     val docsDf = (0 until 10)
       .map(i => (i.toLong, block(i) + " " + block(i + 1)))
       .toDF("doc_id", "text")
-    val sh = Dedup.ngramShingles(docsDf, "doc_id", "text", 3)
-    val edges = Dedup.jaccardAllPairs(sh, "doc_id")
+    val edges = Dedup.jaccardAllPairs(
+        Dedup.ngramShingleHashes(docsDf, "doc_id", "text", 3), "doc_id")
       .filter(col("jaccard") >= 0.1)
       .select(col("id_1").as("u"), col("id_2").as("v"))
     val e = edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -587,5 +603,42 @@ class DedupSpec extends SparkSpec {
     allKept.foreach { case (id, m) =>
       assert(m === expected(id), s"doc $id did not reconstruct verbatim")
     }
+  }
+}
+
+/** Independent references for the hash-array dedup operators: the
+  * string shingles they hash and the exact results over them. */
+object DedupSpec {
+
+  /** Distinct word n-gram shingle STRINGS per doc, `(id, sh)` — the
+    * `a.word || ' ' || b.word ...` shingles of the oracles, built from
+    * [[Dedup.ngrams]] and not from either hash kernel. */
+  def ngramShingles(df: DataFrame, id: String, text: String,
+      n: Int): DataFrame =
+    Dedup.ngrams(df, id, text, n).distinct()
+
+  /** Exact Jaccard of every doc pair sharing a shingle, by a self-join
+    * on the `(doc_id, sh)` strings: `id_1 < id_2, jaccard`. */
+  def jaccardPairs(sh: DataFrame): DataFrame = {
+    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    sh.as("a").join(sh.as("b"),
+        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("id_1"), col("b.doc_id").as("id_2"))
+      .agg(count(lit(1)).as("c"))
+      .join(sizes.as("za"), col("id_1") === col("za.doc_id"))
+      .join(sizes.as("zb"), col("id_2") === col("zb.doc_id"))
+      .select(col("id_1"), col("id_2"), (col("c").cast("double") /
+        (col("za.n") + col("zb.n") - col("c"))).as("jaccard"))
+  }
+
+  /** MinHash signature of one doc's distinct shingles, computed on the
+    * driver: min over shingles of (c_i * h + d_i) mod p, with h the
+    * shingle's portable 60-bit hash mod p. */
+  def minhashReference(shingles: Seq[String], k: Int): Seq[Long] = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val p = Dedup.MinhashPrime
+    val hs = shingles.map(sh => graft.expressions.Kernels
+      .portableHash60(UTF8String.fromString(sh)) % p)
+    Dedup.minhashCoeffs(k).map { case (c, d) => hs.map(h => (h * c + d) % p).min }
   }
 }

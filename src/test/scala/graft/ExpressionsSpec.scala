@@ -167,19 +167,19 @@ class ExpressionsSpec extends SparkSpec {
   test("ngram_shingle_hashes == xxhash64(ngramShingles) set, corpus-wide") {
     val base = Tables.load(spark, sf, "documents")
     for (n <- Seq(1, 3)) {
-      val native = graft.ops.Dedup
+      val harr = graft.ops.Dedup
         .ngramShingleHashes(base, "doc_id", "text", n)
-        .select(col("doc_id"), col("shh"))
-      val composed = graft.ops.Dedup
-        .ngramShingles(base, "doc_id", "text", n)
-        .select(col("doc_id"), xxhash64(col("sh")).as("shh"))
+      val native = harr.select(col("doc_id"), explode(col("hs")).as("shh"))
+      val sh = DedupSpec.ngramShingles(base, "doc_id", "text", n)
+      val composed = sh.select(col("doc_id"), xxhash64(col("sh")).as("shh"))
       assert(native.exceptAll(composed).isEmpty &&
         composed.exceptAll(native).isEmpty, s"n=$n")
-      // narrow sizes agree with the hashed stream
-      val sizes = graft.ops.Dedup
-        .ngramShingleHashSizes(base, "doc_id", "text", n)
-      val counted = native.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      assert(sizes.filter(col("n") > 0).exceptAll(counted).isEmpty, s"n=$n sizes")
+      // size(hs) is each doc's distinct string-shingle count, and a
+      // doc without a shingle has no row
+      val sizes = harr.select(col("doc_id"), size(col("hs")).cast("long").as("n"))
+      val counted = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+      assert(sizes.exceptAll(counted).isEmpty &&
+        counted.exceptAll(sizes).isEmpty, s"n=$n sizes")
     }
   }
 
@@ -188,8 +188,7 @@ class ExpressionsSpec extends SparkSpec {
     val k = 8
     val harr = graft.ops.Dedup
       .ngramPortableHashArrays(base, "doc_id", "text", 3)
-      .filter(size(col("hs")) > 0)
-    val sh = graft.ops.Dedup.ngramShingles(base, "doc_id", "text", 3)
+    val sh = DedupSpec.ngramShingles(base, "doc_id", "text", 3)
     // hash sets: kernel arrays == sorted collect_list of portable hashes
     val nativeSets = harr.select(col("doc_id"),
       array_join(col("hs"), ",").as("hss"))
@@ -198,15 +197,15 @@ class ExpressionsSpec extends SparkSpec {
         collect_list(graft.ops.Text.portableHash(col("sh")))), ",").as("hss"))
     assert(nativeSets.exceptAll(composedSets).isEmpty &&
       composedSets.exceptAll(nativeSets).isEmpty)
-    // signatures: kernel == the 64-column min aggregate (k=8 here)
+    // signatures: kernel == min per doc of the affine family over the
+    // string shingles' portable hashes, computed on the driver
     val nativeSigs = harr.select(col("doc_id"),
-      array_join(GraftFunctions.minhash_sigs(col("hs"), k), ",").as("s"))
-    val composedSigs = graft.ops.Dedup
-      .minhashSignatures(sh, "doc_id", k)
-      .select(col("doc_id"), array_join(array(
-        (0 until k).map(i => col(s"sig_$i")): _*), ",").as("s"))
-    assert(nativeSigs.exceptAll(composedSigs).isEmpty &&
-      composedSigs.exceptAll(nativeSigs).isEmpty)
+        GraftFunctions.minhash_sigs(col("hs"), k).as("s"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val refSigs = sh.groupBy("doc_id").agg(collect_list(col("sh")))
+      .collect().map(r => r.getLong(0) ->
+        DedupSpec.minhashReference(r.getSeq[String](1), k)).toMap
+    assert(nativeSigs.nonEmpty && nativeSigs === refSigs)
   }
 
   test("salted_minhash_sigs == transform/array_min composed form") {

@@ -42,6 +42,23 @@ class MlThresholdSpec extends SparkSpec {
     assert(cells(0) + cells(3) === r.getAs[Long]("n_correct"))
   }
 
+  test("naive bayes and kmeans: score after an Observation ran in the session") {
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.functions.{col, count, lit, pmod}
+    // the logreg hazard above, for the two other MLlib paths that score
+    // through the fitted model (NB's transform, k-means' summary)
+    val obs = Observation()
+    spark.range(0, 3).observe(obs, count(lit(1)).as("n")).collect()
+    assert(obs.get("n") === 3L)
+    val nTest = Tables.load(spark, sf, "documents")
+      .filter(pmod(col("doc_id"), lit(10)) === 0).count()
+    val nb = MlPipelines.naiveBayesMllib(spark, sf).collect()
+    assert(nb.map(_.getAs[Long]("n")).sum === nTest)
+    val km = MlPipelines.kmeansMllib(spark, sf).collect()
+    assert(km.map(_.getAs[Long]("n")).sum ===
+      Tables.load(spark, sf, "embeddings").count())
+  }
+
   test("naive bayes: accuracy at least majority-class rate") {
     val conf = MlPipelines.naiveBayesMllib(spark, sf).collect()
     val total = conf.map(_.getAs[Long]("n")).sum

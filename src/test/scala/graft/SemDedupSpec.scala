@@ -47,15 +47,18 @@ class SemDedupSpec extends SparkSpec {
   test("cosine assignment: join path == kernel-literal path on the same centroids") {
     val e = embs
     val cents = SemDedup.sampledCentroids(e)
-    val lit = asgSet(SemDedup.assignCosLiteral(e, cents))
+    val lit = asgSet(SemDedup.assignCosLiteralRows(e,
+      cents.select("cid", "cvec").collect()))
     val join = asgSet(SemDedup.assignCosJoin(e, cents))
     assert(lit.nonEmpty && lit == join)
   }
 
   test("ADC assignment: join path == kernel-literal path on the same centroids") {
+    import graft.expressions.GraftFunctions.pq_encode
     val e = embs
     val cents = SemDedup.sampledCentroids(e)
-    val lit = asgSet(SemDedup.assignAdcLiteral(e, cents))
+    val lit = asgSet(SemDedup.assignAdcLiteralRows(e, cents
+      .select(col("cid"), pq_encode(col("cvec")).as("ccodes")).collect()))
     val join = asgSet(SemDedup.assignAdcJoin(e, cents))
     assert(lit.nonEmpty && lit == join)
   }

@@ -51,7 +51,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("ngram shingles: n=2 over 4 words -> 3 shingles") {
     val df = Seq((1L, "a b c d")).toDF("id", "text")
-    val sh = Dedup.ngramShingles(df, "id", "text", 2)
+    val sh = DedupSpec.ngramShingles(df, "id", "text", 2)
       .select("sh").collect().map(_.getString(0)).sorted
     assert(sh.toSeq === Seq("a b", "b c", "c d"))
   }
