@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.graftbridge.ParquetFooterBridge
 import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
 
@@ -62,23 +63,26 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     readerConfs(spark)
-    normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet"))
+    normalizeTs(readParquet(spark, s"$sfDir/$name.parquet"))
   }
 
   /** The on-file schema (what `readStream.schema(...)` must be handed —
-    * the post-[[normalizeTs]] schema would mis-describe the parquet).
-    * Cached per (sfDir, name): loadStream callers (one per streaming
-    * query) would otherwise pay a redundant footer read each call. The
-    * testdata is immutable (TESTDATA.md), so the cache never staleness.
+    * the post-[[normalizeTs]] schema would mis-describe the parquet),
+    * read from the footer on the driver under [[readerConfs]]: no Spark
+    * job, unlike `spark.read.parquet`'s inference.
     */
-  def rawSchema(spark: SparkSession, sfDir: String, name: String): StructType =
-    schemaCache.computeIfAbsent(s"$sfDir/$name", { _ =>
-      readerConfs(spark)
-      spark.read.parquet(s"$sfDir/$name.parquet").schema
-    })
+  def rawSchema(spark: SparkSession, sfDir: String, name: String): StructType = {
+    readerConfs(spark)
+    ParquetFooterBridge.schema(spark, s"$sfDir/$name.parquet")
+  }
 
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+  /** A parquet file or directory read with the schema its footers
+    * declare (the schema Spark's inference gives it, merged across
+    * files), so the read starts no Spark job. graft's one parquet read
+    * without a declared schema.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(ParquetFooterBridge.schema(spark, path)).parquet(path)
 
   /** Streaming read of one table with the same `ts` normalization as
     * [[load]]: raw file schema on the source, nanos-long `ts` out.

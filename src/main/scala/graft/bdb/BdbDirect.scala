@@ -65,31 +65,36 @@ object BdbDirect extends Suite {
     else "/root/repo/bench/bdb_oracle"
   })
 
-  /** Cache the fixture DataFrames for the CURRENT SparkSession (the
-    * parquet footer read is the per-call cost — these queries run
-    * back-to-back in one Bench/Verify session), but re-register the
-    * temp views on EVERY call: view names like `customer` collide
-    * with Tables.registerAll's testdata views, so a cached
-    * registration flag would read the wrong table when an o-series
-    * spark.sql query runs in between. A single-slot cache, not a
-    * WeakHashMap: the cached DataFrames strongly reference their
-    * session, so weak keys would never evict and every past session
-    * would be retained for the JVM's lifetime. */
+  /** The fixture DataFrames of the CURRENT SparkSession, read with the
+    * schemas [[graft.tools.BdbOracleDump]] wrote them from
+    * ([[BdbSchemas.schema]]), so no read starts a Spark job. They are
+    * cached because resolving 23 parquet relations still costs the
+    * driver several hundred milliseconds per call, and these queries
+    * run back-to-back in one Bench/Verify session. The temp views are
+    * re-registered on EVERY call: view names like `customer` collide
+    * with Tables.registerAll's testdata views, so a registration flag
+    * would read the wrong table when an o-series spark.sql query runs
+    * in between. A single-slot cache, not a WeakHashMap: the cached
+    * DataFrames strongly reference their session, so weak keys would
+    * never evict and every past session would be retained for the
+    * JVM's lifetime. */
   @volatile private var frameCache
       : (SparkSession, Seq[(String, org.apache.spark.sql.DataFrame)]) = null
 
-  private def reg(s: SparkSession): Unit = {
+  private[graft] def reg(s: SparkSession): Unit = {
     val cached = frameCache
     val fs =
       if (cached != null && (cached._1 eq s)) cached._2
       else {
-        val v = BdbSchemas.tables.map(t =>
-          t -> s.read.parquet(s"$Base/$t.parquet"))
+        val v = BdbSchemas.tables.map(t => t -> fixture(s, t))
         frameCache = (s, v)
         v
       }
     fs.foreach { case (t, df) => df.createOrReplaceTempView(t) }
   }
+
+  private def fixture(s: SparkSession, t: String) =
+    s.read.schema(BdbSchemas.schema(t)).parquet(s"$Base/$t.parquet")
 
   private def rp(t: String): String = s"read_parquet('$Base/$t.parquet')"
 
@@ -107,7 +112,7 @@ object BdbDirect extends Suite {
       // null-ts rows are excluded from BOTH sides of the compare:
       // countDistinct skips null components, so counting them on the
       // left would trip the gate on a fixture with no real collision
-      val r = s.read.parquet(s"$Base/web_clickstreams.parquet")
+      val r = fixture(s, "web_clickstreams")
         .filter(col("wcs_user_sk").isNotNull &&
           col("wcs_click_date_sk").isNotNull &&
           col("wcs_click_time_sk").isNotNull)

@@ -61,7 +61,7 @@ object Partitioned {
       .map(_.getLen).sum
     val nFiles = math.max(1,
       ((totalBytes + targetBytes - 1) / targetBytes).toInt)
-    spark.read.parquet(inPath)
+    graft.Tables.readParquet(spark, inPath)
       .repartition(nFiles)
       .write.mode("overwrite").parquet(outPath)
     nFiles

@@ -555,7 +555,7 @@ object Relational extends Suite {
       val tmp = "/root/repo/target/graft-tmp/pq_roundtrip"
       t(s, d, "orders").filter(col("o_orderstatus") === "F")
         .write.mode("overwrite").parquet(tmp)
-      s.read.parquet(tmp)
+      Tables.readParquet(s, tmp)
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
         .orderBy("o_orderpriority")

@@ -643,7 +643,7 @@ object Relational2 extends Suite {
         datediff(to_date(col("o_orderdate")), lit("1970-01-01")))
       graft.ops.Partitioned.zorderWrite(o, tmp,
         col("o_custkey"), col("day"), nFiles = 16)
-      s.read.parquet(tmp)
+      Tables.readParquet(s, tmp)
         .filter(col("o_custkey").between(100, 400) &&
           col("day").between(9131, 9496))
         .groupBy("o_orderstatus")
@@ -709,8 +709,9 @@ object Relational2 extends Suite {
              |ORDER BY o_orderpriority, status""".stripMargin)),
 
     // Schema evolution: two parquet batches with different schemas
-    // (the second adds a column) read back as ONE table via
-    // mergeSchema — the old batch surfaces NULL for the new column.
+    // (the second adds a column) read back as ONE table through the
+    // merged footer schema (`Tables.readParquet`, Spark's mergeSchema
+    // conversion) — the old batch surfaces NULL for the new column.
     // This is the operational reality of a 100 TB table that gained
     // a column mid-history; the oracle replays the union semantics.
     Q("o59_schema_evolution", (s, d) => {
@@ -723,7 +724,7 @@ object Relational2 extends Suite {
         .select(col("o_orderkey"), col("o_custkey"),
           col("o_orderpriority"))
         .write.mode("overwrite").parquet(s"$tmp/b=2")
-      s.read.option("mergeSchema", "true").parquet(tmp)
+      Tables.readParquet(s, tmp)
         .groupBy(coalesce(col("o_orderpriority"), lit("LEGACY"))
           .as("priority"))
         .agg(count(lit(1)).as("n"), countDistinct("o_custkey").as("n_cust"))

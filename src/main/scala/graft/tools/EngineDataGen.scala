@@ -74,7 +74,8 @@ object EngineDataGen {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 
-    def t(name: String) = spark.read.parquet(s"$template/$name.parquet")
+    def t(name: String) =
+      graft.Tables.readParquet(spark, s"$template/$name.parquet")
 
     // ---- size-invariant dimensions: copy verbatim ------------------
     writeOne(t("region"), outDir, "region")

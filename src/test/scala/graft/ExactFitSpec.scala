@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.{ExactLinFit, ExactLloyd}
+import org.apache.spark.graftbridge.JobCount
 import org.apache.spark.sql.functions._
 
 /** Hand-checkable cases for the deterministic fit machinery behind
@@ -65,6 +66,25 @@ class ExactFitSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toList
     assert(run() == run())
   }
+
+  test("ExactLloyd: one job per round on top of a fixed count") {
+    val feats = (1L to 60L).map(i =>
+      (i, (i % 7).toDouble * 3, (i % 5).toDouble)).toDF("id", "fx", "fy")
+      .repartition(4)
+    def jobs(iters: Int): Int = JobCount(spark.sparkContext) {
+      ExactLloyd.fitLabels(feats, "id", Seq("fx", "fy"),
+        k = 4, iters = iters, unit = 100L).collect()
+    }._2
+    val one = jobs(1)
+    assert(jobs(4) - one === 3)
+    assert(one - 1 <= LloydFixedJobs, s"$one jobs at one round")
+  }
+
+  /** Jobs of a fit besides its rounds, on a frame not keyed by id:
+    * the input's own repartition, the id grouping's shuffle and the
+    * hold, the seed, the final assignment, and the sorted collect's
+    * three. */
+  private val LloydFixedJobs = 8
 
   test("ExactLinFit: recovers an exactly linear label") {
     // y == x2 on a full factorial: least squares has the exact
