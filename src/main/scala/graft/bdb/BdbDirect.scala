@@ -65,9 +65,10 @@ object BdbDirect extends Suite {
     else "/root/repo/bench/bdb_oracle"
   })
 
-  /** The fixture DataFrames of the CURRENT SparkSession, read with the
-    * schemas [[graft.tools.BdbOracleDump]] wrote them from
-    * ([[BdbSchemas.schema]]), so no read starts a Spark job. They are
+  /** The fixture DataFrames of the CURRENT SparkSession, built by
+    * [[BdbCatalog.frame]] as the benchmark's tables are: the schemas
+    * [[graft.tools.BdbOracleDump]] wrote them from, so no read starts a
+    * Spark job, and the dimensions' broadcast hints. They are
     * cached because resolving 23 parquet relations still costs the
     * driver several hundred milliseconds per call, and these queries
     * run back-to-back in one Bench/Verify session. The temp views are
@@ -94,7 +95,7 @@ object BdbDirect extends Suite {
   }
 
   private def fixture(s: SparkSession, t: String) =
-    s.read.schema(BdbSchemas.schema(t)).parquet(s"$Base/$t.parquet")
+    BdbCatalog.frame(s, t, s"$Base/$t.parquet")
 
   private def rp(t: String): String = s"read_parquet('$Base/$t.parquet')"
 

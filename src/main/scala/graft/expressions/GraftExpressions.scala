@@ -247,13 +247,13 @@ object Kernels {
   /** Integer-L2 argmin against a flattened centroid matrix: for a
     * quantized micro-unit vector v (dim = v.length), return the id of
     * the centroid (entry c*dim + j) minimizing the exact squared
-    * distance, ties to the lowest id — the m02 Lloyd assignment as
-    * ONE narrow kernel call. The per-iteration centroid matrix comes
-    * from a k-bounded driver collect, the same
-    * collect-then-broadcast-values loop MLlib's KMeans runs; the
-    * keyed-join form shuffles an n*k*dim exploded distance stream
-    * per iteration instead. Overflow-safe: micro-unit diffs <= ~1e6
-    * => per-term <= 1e12, * dim(64) « 2^63.
+    * distance, ties to the lowest id — the Lloyd assignment of
+    * [[graft.ops.ExactLloyd]]'s rounds as ONE kernel call per row.
+    * The per-iteration centroid matrix comes from a k-bounded driver
+    * collect, the same collect-then-broadcast-values loop MLlib's
+    * KMeans runs; the keyed-join form shuffles an n*k*dim exploded
+    * distance stream per iteration instead. Overflow-safe: micro-unit
+    * diffs <= ~1e6 => per-term <= 1e12, * dim(64) « 2^63.
     */
   def argminL2Micro(v: ArrayData, cents: ArrayData, ids: ArrayData): Long = {
     val dim = v.numElements()
@@ -1293,40 +1293,6 @@ case class PqAssignAdc(emb: Expression, codes: Expression, ids: Expression)
       t: Expression): PqAssignAdc = copy(emb = f, codes = s, ids = t)
 }
 
-/** argmin_l2_micro(array<bigint>, array<bigint>, array<bigint>) ->
-  * bigint: id of the integer-L2-argmin centroid. See
-  * [[Kernels.argminL2Micro]].
-  */
-case class ArgminL2Micro(v: Expression, cents: Expression, ids: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def first: Expression = v
-  override def second: Expression = cents
-  override def third: Expression = ids
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (v.dataType, cents.dataType, ids.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, false),
-          ArrayType(LongType, false)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-        .TypeCheckFailure("argmin_l2_micro needs (array<bigint>, " +
-          s"array<bigint>, array<bigint>), got $other")
-    }
-
-  override def nullSafeEval(a: Any, c: Any, i: Any): Any =
-    Kernels.argminL2Micro(a.asInstanceOf[ArrayData],
-      c.asInstanceOf[ArrayData], i.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, c, i) =>
-      s"graft.expressions.Kernels.argminL2Micro($a, $c, $i)")
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): ArgminL2Micro = copy(v = f, cents = s, ids = t)
-}
-
 /** argmin_l2_micro_d2(array<bigint>, array<bigint>, array<bigint>) ->
   * array<bigint> [bestId, bestD2]. See [[Kernels.argminL2MicroD2]].
   */
@@ -1876,8 +1842,6 @@ object GraftFunctions {
   def pq_adc_lut(c: Column): Column = toCol(PqAdcLut(toExpr(c)))
   def pq_assign_adc(emb: Column, codes: Column, ids: Column): Column =
     toCol(PqAssignAdc(toExpr(emb), toExpr(codes), toExpr(ids)))
-  def argmin_l2_micro(v: Column, cents: Column, ids: Column): Column =
-    toCol(ArgminL2Micro(toExpr(v), toExpr(cents), toExpr(ids)))
   def argmin_l2_micro_d2(v: Column, cents: Column, ids: Column): Column =
     toCol(ArgminL2MicroD2(toExpr(v), toExpr(cents), toExpr(ids)))
   def pq_encode_cb(emb: Column, cb: Column, present: Column): Column =
@@ -1911,14 +1875,19 @@ object GraftFunctions {
       map: java.util.HashMap[UTF8String, java.lang.Long]): Column =
     toCol(WordLookupSums(toExpr(words), map))
 
+  /** The SQL-callable functions, (name, expression class, builder):
+    * [[register]] and [[GraftSparkExtensions]] both read this list. */
+  private[expressions] val sqlFunctions
+      : Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("portable_hash60", classOf[PortableHash60], e => PortableHash60(e.head)),
+    ("cosine_f", classOf[CosineF], e => CosineF(e(0), e(1))),
+    ("multi_needle_matches", classOf[MultiNeedleMatches],
+      e => MultiNeedleMatches(e(0), e(1))))
+
   /** Register as SQL functions (`SELECT portable_hash60(x)`). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "portable_hash60", exprs => PortableHash60(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_f", exprs => CosineF(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "multi_needle_matches",
-      exprs => MultiNeedleMatches(exprs(0), exprs(1)), "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    sqlFunctions.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, build, "built-in")
+    }
 }

@@ -11,19 +11,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * Equivalent to [[GraftFunctions.register]] on a live session.
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("portable_hash60"),
-      new ExpressionInfo(classOf[PortableHash60].getName, "portable_hash60"),
-      exprs => PortableHash60(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("cosine_f"),
-      new ExpressionInfo(classOf[CosineF].getName, "cosine_f"),
-      exprs => CosineF(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("multi_needle_matches"),
-      new ExpressionInfo(classOf[MultiNeedleMatches].getName,
-        "multi_needle_matches"),
-      exprs => MultiNeedleMatches(exprs(0), exprs(1))))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.sqlFunctions.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
 }

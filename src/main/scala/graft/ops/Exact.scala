@@ -194,50 +194,3 @@ object Exact {
     r6((sy - dslopeRaw(x, y) * sx) / n)
   }
 }
-
-/** Element-wise sum of long vectors — the recenter half of an exact
-  * integer Lloyd iteration as ONE cid-keyed aggregation over the
-  * per-vector arrays: the partial state is a single dim-length sums
-  * array, so only k*dim longs cross the exchange instead of the
-  * n*dim exploded (vec, dim, v) join+groupBy stream (m02's recenter
-  * was an eq-join + (cid, dim) aggregate over 1.28M rows per
-  * iteration). Values are identical: the same integers sum per
-  * (cid, dim) in any order. Accumulation uses Math.addExact: a
-  * centroid sum that would wrap a long (possible at ~1e12 rows of
-  * 1e8-unit features — the 100 TB regime) throws ArithmeticException
-  * LOUDLY instead of recentering on garbage.
-  */
-class LongVecSumAgg extends org.apache.spark.sql.expressions
-    .Aggregator[Seq[Long], Array[Long], Seq[Long]] {
-  override def zero: Array[Long] = Array.emptyLongArray
-  override def reduce(b: Array[Long], v: Seq[Long]): Array[Long] =
-    if (b.isEmpty) v.toArray
-    else {
-      // fail LOUDLY on ragged input in BOTH directions: a longer v
-      // would otherwise silently drop its trailing dimensions (the
-      // loop bounds on b.length), while a shorter one threw — wrong
-      // centroid sums with no error is the exact failure this class's
-      // addExact discipline exists to prevent
-      if (v.length != b.length) throw new IllegalArgumentException(
-        s"LongVecSumAgg: ragged vectors (${b.length} vs ${v.length})")
-      var i = 0
-      while (i < b.length) { b(i) = Math.addExact(b(i), v(i)); i += 1 }
-      b
-    }
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] =
-    if (a.isEmpty) b
-    else if (b.isEmpty) a
-    else {
-      if (a.length != b.length) throw new IllegalArgumentException(
-        s"LongVecSumAgg: ragged partials (${a.length} vs ${b.length})")
-      var i = 0
-      while (i < a.length) { a(i) = Math.addExact(a(i), b(i)); i += 1 }
-      a
-    }
-  override def finish(b: Array[Long]): Seq[Long] =
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
-  override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  override def outputEncoder: org.apache.spark.sql.Encoder[Seq[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
-}

@@ -3,16 +3,16 @@ package graft.ops
 import graft.expressions.GraftFunctions.argmin_l2_micro_d2
 import graft.expressions.Kernels
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 
-/** Exact-integer Lloyd k-means over a NAMED-COLUMN feature frame —
-  * the m02 discipline (`queries/MlQueries.scala` kmeansIter)
-  * generalized so the BDB segmentation fits (q20/q25/q26) can run
-  * their ACTUAL clustering as replayable relational algebra instead
-  * of a threshold-checked MLlib fit:
+/** Exact-integer Lloyd k-means, the one implementation behind m02
+  * (`queries/MlQueries.scala`, an embedding array column) and the BDB
+  * segmentation fits q20/q25/q26 (b61–b63, named feature columns),
+  * so both run their ACTUAL clustering as replayable relational
+  * algebra instead of a threshold-checked MLlib fit:
   *
   *  - features quantized ONCE to integer units (`round(x*unit)` as
   *    BIGINT — pick `unit` so the source values are exact, e.g. 100
@@ -24,19 +24,22 @@ import org.apache.spark.sql.functions._
   *    the driver adds the partials and recenters by exact
   *    floor-division mean — the collect-then-broadcast loop MLlib's
   *    KMeans runs, without a shuffle;
-  *  - after `iters` rounds, one final assignment against the final
-  *    centroids yields the labels, and the exact integer WSSSE
-  *    (sum of squared unit-space distances) is computed through
-  *    DECIMAL(38,0) so a 100 TB corpus cannot silently wrap a BIGINT
-  *    accumulator (per-row d2 stays in long — safe while
+  *  - [[fit]] stops after `iters` rounds and returns the centroids
+  *    with the last round's member counts (m02 reads its answer off
+  *    them, no further job); [[fitLabels]] adds one final assignment
+  *    against the final centroids for the labels, and the exact
+  *    integer WSSSE (sum of squared unit-space distances) is computed
+  *    through DECIMAL(38,0) so a 100 TB corpus cannot silently wrap a
+  *    BIGINT accumulator (per-row d2 stays in long — safe while
   *    unit*|x| <= ~1e8 at dim <= 64, which each call site documents;
   *    the recenter sums use Math.addExact, so a centroid sum that
   *    would wrap fails LOUDLY instead).
   *
   * Every value is an exact integer, so the result is independent of
   * partitioning and accumulation order, and a DuckDB oracle can
-  * replay the unrolled iterations verbatim (the b61–b63 gates).
-  * Deterministic seeding: the k rows with the smallest ids.
+  * replay the unrolled iterations verbatim (the m02 and b61–b63
+  * gates). Deterministic seeding: [[fitLabels]] takes the k rows with
+  * the smallest ids, m02 its oracle's `vec_id < 8`.
   *
   * Reference: the fits this replays are TPCx-BB q20/q25/q26
   * (`gpu_bdb/bdb_tools/q20_utils.py` etc., k-means k=8); their
@@ -47,17 +50,33 @@ import org.apache.spark.sql.functions._
   */
 object ExactLloyd {
 
-  /** (flat k*dim matrix, sorted ids) from collected (cid, qv) rows. */
-  private def toMatrix(rows: Array[(Long, Array[Long])])
-      : (Array[Long], Array[Long]) = {
+  /** A fitted model: the surviving centroids as a flat (ids.length *
+    * dim) matrix in ascending id order, their ids, and each one's
+    * member count in the last round. */
+  final case class Fit(cents: Array[Long], ids: Array[Long],
+      counts: Array[Long]) {
+    def dim: Int = cents.length / ids.length
+  }
+
+  /** The quantization rule: `round(x*unit)` as BIGINT. */
+  def quantize(x: Column, unit: Long): Column =
+    round(x.cast("double") * unit, 0).cast("long")
+
+  /** Seed model from collected (id, qv) rows. Equal lengths and
+    * distinct ids are checked here, where a ragged or repeated seed
+    * would otherwise be truncated or resolved arbitrarily. */
+  private def seedFit(rows: Array[(Long, Array[Long])]): Fit = {
+    require(rows.nonEmpty,
+      "ExactLloyd: empty feature frame (nothing to seed from)")
     val sorted = rows.sortBy(_._1)
     val ids = sorted.map(_._1)
     val dim = sorted.head._2.length
-    val flat = new Array[Long](ids.length * dim)
-    sorted.zipWithIndex.foreach { case ((_, v), i) =>
-      System.arraycopy(v, 0, flat, i * dim, dim)
-    }
-    (flat, ids)
+    require(sorted.forall(_._2.length == dim),
+      s"ExactLloyd: ragged seed vectors (${sorted.map(_._2.length)
+        .distinct.mkString(" vs ")})")
+    require(ids.distinct.length == ids.length,
+      s"ExactLloyd: duplicate seed ids (${ids.mkString(", ")})")
+    Fit(sorted.flatMap(_._2), ids, Array.emptyLongArray)
   }
 
   /** One Lloyd round as one job over the (_id, qv) rows: each
@@ -65,13 +84,13 @@ object ExactLloyd {
     * counts, the driver adds them and takes the floor-division mean
     * (Math.floorDiv is DuckDB's `//` on negative sums). Clusters that
     * lost every member drop out, as they do from the oracle's
-    * GROUP BY.
+    * GROUP BY. A row whose length differs from the centroids' fails
+    * the kernel's shape check; a sum past a long fails Math.addExact.
     */
-  private def recenter(rows: RDD[InternalRow],
-      cents: (Array[Long], Array[Long])): (Array[Long], Array[Long]) = {
-    val (flat, ids) = cents
+  private def recenter(rows: RDD[InternalRow], f: Fit): Fit = {
+    val Fit(flat, ids, _) = f
     val nc = ids.length
-    val dim = flat.length / nc
+    val dim = f.dim
     def add(acc: Array[Long], p: Int, v: Long): Unit =
       acc(p) = Math.addExact(acc(p), v)
     val partials = rows.mapPartitions { it =>
@@ -96,17 +115,29 @@ object ExactLloyd {
       pn.indices.foreach(x => add(n, x, pn(x)))
     }
     val kept = (0 until nc).filter(n(_) > 0)
-    (kept.flatMap(p => (0 until dim).map(j =>
+    Fit(kept.flatMap(p => (0 until dim).map(j =>
       Math.floorDiv(sums(p * dim + j), n(p)))).toArray,
-      kept.map(ids(_)).toArray)
+      kept.map(ids(_)).toArray, kept.map(n(_)).toArray)
+  }
+
+  /** `iters` (>= 1) Lloyd rounds over `qv`, seeded from `seed`'s
+    * collected rows; both frames are (_id bigint, qv array<bigint>).
+    * Jobs: the seed's collect, then one per round, each re-reading
+    * `qv` (hold it first if it is expensive to recompute).
+    */
+  def fit(qv: DataFrame, seed: DataFrame, iters: Int): Fit = {
+    require(iters >= 1, s"ExactLloyd: iters must be >= 1, got $iters")
+    val start = seedFit(seed.collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)))
+    val rows = qv.queryExecution.toRdd
+    (1 to iters).foldLeft(start)((f, _) => recenter(rows, f))
   }
 
   /** Labels + exact WSSSE: one row per input row with
     * (idCol, cluster, wssse) — wssse the scalar total on every row (the
     * o29 pattern), in squared unit-space integers. Jobs: the feature
     * frame's own and the id grouping's shuffle, then one to hold the
-    * quantized vectors, one to seed, one per round and one for the
-    * final assignment.
+    * quantized vectors, [[fit]]'s, and one for the final assignment.
     */
   def fitLabels(feats: DataFrame, idCol: String, dims: Seq[String],
       k: Int, iters: Int, unit: Long): DataFrame = {
@@ -121,7 +152,7 @@ object ExactLloyd {
     val qv = Materialize(feats
       .groupBy(col(idCol).cast("long").as("_id"))
       .agg(count(lit(1)).as("_n"), dims.zip(q).map { case (d, c) =>
-        first(round(col(d).cast("double") * unit, 0).cast("long")).as(c)
+        first(quantize(col(d), unit)).as(c)
       }: _*)
       .observe(shape, sum(col("_n")).as("rows"), count(col("_id")).as("ids"))
       .select(col("_id"), array(q.map(col): _*).as("qv")))
@@ -131,13 +162,7 @@ object ExactLloyd {
       s"ExactLloyd: feature frame has $nRows rows but only $nIds " +
         "distinct ids — seeding by k-smallest-id requires one row per " +
         "id (dedupe/group the feature frame before fitting)")
-    val seedRows = qv.orderBy("_id").limit(k).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    require(seedRows.nonEmpty,
-      "ExactLloyd: empty feature frame (nothing to seed from)")
-    val rows = qv.queryExecution.toRdd
-    var cents = toMatrix(seedRows)
-    (1 to iters).foreach { _ => cents = recenter(rows, cents) }
+    val f = fit(qv, qv.orderBy("_id").limit(k), iters)
 
     // FINAL assignment and its WSSSE in ONE kernel pass:
     // argmin_l2_micro_d2 returns [cid, d2], the winning squared
@@ -146,7 +171,7 @@ object ExactLloyd {
     val total = Observation()
     val labels = Materialize(qv.select(col("_id"),
         argmin_l2_micro_d2(col("qv"),
-          typedlit(cents._1.toSeq), typedlit(cents._2.toSeq)).as("_ad"))
+          typedlit(f.cents.toSeq), typedlit(f.ids.toSeq)).as("_ad"))
       .select(col("_id"), col("_ad").getItem(0).as("cid"),
         col("_ad").getItem(1).as("d2"))
       .observe(total, sum(col("d2").cast("decimal(38,0)")).as("wssse"))

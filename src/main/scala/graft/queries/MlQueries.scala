@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ops.{Exact, Materialize, Text}
+import graft.ops.{Exact, ExactLloyd, Materialize, Text}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -60,99 +60,26 @@ object MlQueries extends Suite {
       lit(0.0), (acc, x) => acc + x), 6)
 
   // ---------------------------------------------------------------
-  // m02: unrolled Lloyd iterations in exact integer micro-units.
-  // Embeddings quantized once to 6-decimal micro-units (bigint); per
-  // iteration: assign by integer squared distance (argmin with cid
-  // tiebreak), recenter by exact floor-division mean. Every value is
-  // an exact integer → order-independent, engine-exact.
+  // m02: three Lloyd rounds in exact integer micro-units on
+  // ExactLloyd's one-job rounds. Embeddings quantized once to
+  // 6-decimal micro-units (bigint), seeded by the oracle's
+  // vec_id < 8; the answer (cid, n, first four centroid dims) is read
+  // off the fit's final centroids and last-round counts, no further
+  // job.
   // ---------------------------------------------------------------
 
   private val KmIters = 3
 
   private def kmeansIter(s: SparkSession, d: String): DataFrame = {
-    import graft.expressions.GraftFunctions.argmin_l2_micro
-    // quantized per-vector array — narrow, recomputed per pass,
-    // cheaper than materializing. Both assignment AND recentering now
-    // work on the dense arrays (the exploded (vec, dim, v) table and
-    // its 1.28M-row checkpoint are gone).
-    val qv = embs(s, d).select(col("vec_id"),
-      transform(col("embedding"),
-        x => round(x.cast("double") * 1000000, 0).cast("long")).as("qv"))
-
-    // Assignment is ONE narrow kernel pass per iteration
-    // (argmin_l2_micro against the k*dim centroid matrix), with the
-    // centroids COLLECTED to the driver between iterations — the
-    // exact loop MLlib's KMeans runs (collect + broadcast values).
-    // The previous keyed-join form shuffled an n*k exploded distance
-    // stream per iteration (m02 7.6 s at sf1; this form ~2 s). k is
-    // 8 by construction, so the collect is k*dim rows per iteration.
-    def collectCents(df: DataFrame): (Array[Long], Array[Long]) = {
-      val rows = df.collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-      val ids = rows.map(_._1).distinct.sorted
-      val dims = rows.map(_._2).max
-      val flat = new Array[Long](ids.length * dims)
-      val idPos = ids.zipWithIndex.toMap
-      rows.foreach { case (cid, dim, cv) =>
-        flat(idPos(cid) * dims + (dim - 1)) = cv
-      }
-      (flat, ids)
-    }
-    def assign(cents: (Array[Long], Array[Long])): DataFrame =
-      qv.select(col("vec_id"),
-        argmin_l2_micro(col("qv"), typedlit(cents._1.toSeq),
-          typedlit(cents._2.toSeq)).as("cid"),
-        col("qv"))
-    // exact floor-division mean (pmod keeps Spark's truncating `div`
-    // aligned with DuckDB's flooring `//` on negative sums).
-    // Recentering is ONE cid-keyed aggregation over the dense
-    // arrays: LongVecSumAgg's partial is a dim-length sums array, so
-    // k*dim longs cross the exchange instead of the old eq-join +
-    // (cid, dim) aggregate over the n*dim exploded stream. Same
-    // integers sum per (cid, dim) in any order -> identical values.
-    val vsum = udaf(new graft.ops.LongVecSumAgg)
-    def recenter(asgQv: DataFrame): DataFrame = asgQv
-      .groupBy("cid")
-      .agg(vsum(col("qv")).as("sv"), count(lit(1)).as("n"))
-      .select(col("cid"), col("n"), posexplode(col("sv")))
-      .toDF("cid", "n", "pos", "s")
-      .select(col("cid"), (col("pos") + 1).cast("int").as("dim"),
-        expr("(s - pmod(s, n)) div n").as("cv"))
-
-    val c0 = collectCents(qv.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), posexplode(col("qv")))
-      .toDF("cid", "pos", "cv")
-      .select(col("cid"), (col("pos") + 1).cast("int").as("dim"),
-        col("cv")))
-    var cents = c0
-    var lastAsg: DataFrame = null
-    var lastCn: Array[(Long, Int, Long)] = null
-    (1 to KmIters).foreach { _ =>
-      lastAsg = assign(cents)
-      val cn = recenter(lastAsg)
-      lastCn = cn.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-      cents = {
-        val ids = lastCn.map(_._1).distinct.sorted
-        val dims = lastCn.map(_._2).max
-        val flat = new Array[Long](ids.length * dims)
-        val idPos = ids.zipWithIndex.toMap
-        lastCn.foreach { case (cid, dim, cv) =>
-          flat(idPos(cid) * dims + (dim - 1)) = cv
-        }
-        (flat, ids)
-      }
-    }
-    val n = lastAsg.groupBy("cid").agg(count(lit(1)).as("n"))
     import s.implicits._
-    val piv = lastCn.filter(_._2 <= 4)
-      .groupBy(_._1).toSeq
-      .map { case (cid, rows) =>
-        val byDim = rows.map(r => r._2 -> r._3).toMap
-        (cid, byDim(1), byDim(2), byDim(3), byDim(4))
-      }
-      .toDF("cid", "c1", "c2", "c3", "c4")
-    n.join(broadcast(piv), "cid") // k <= 8 rows: broadcast at any scale
-      .select("cid", "n", "c1", "c2", "c3", "c4").orderBy("cid")
+    val qv = embs(s, d).select(col("vec_id").cast("long").as("_id"),
+      transform(col("embedding"), ExactLloyd.quantize(_, 1000000L))
+        .as("qv"))
+    val f = ExactLloyd.fit(qv, qv.filter(col("_id") < 8), KmIters)
+    f.ids.indices.map { p =>
+      val c = f.cents.slice(p * f.dim, p * f.dim + 4)
+      (f.ids(p), f.counts(p), c(0), c(1), c(2), c(3))
+    }.toDF("cid", "n", "c1", "c2", "c3", "c4")
   }
 
   private val kmeansIterSql: String = {
@@ -796,8 +723,8 @@ object MlQueries extends Suite {
     // matrix: 36 plain sum() columns (upper triangle of the 8x8,
     // mirrored driver-side) in ONE whole-stage-codegen aggregate
     // with constant-size map-side partials — no per-row array
-    // allocation, no HOF lambda, no UDAF serialization (the
-    // outer-product-array + LongVecSumAgg form of the same pass
+    // allocation, no HOF lambda, no UDAF serialization (an
+    // outer-product-array + vector-sum UDAF form of the same pass
     // measured 4.6 s vs 0.5 s at sf0.1), no explode, no (i,j)-keyed
     // shuffle of n*64 rows. The iteration itself is
     // k-bounded driver math on the ONE collected row (m10's

@@ -13,27 +13,6 @@ import org.apache.spark.sql.SparkSession
   * real cluster size it to the executor count like any shuffle.
   */
 object StreamConf {
-  /** Bench knob: SPARK_GRAFT_STATE_PARTS overrides the x-series state
-    * partition count (for measuring the store-count/parallelism
-    * tradeoff without a rebuild). */
-  private val statePartsOverride: Option[Int] =
-    sys.env.get("SPARK_GRAFT_STATE_PARTS").map(_.toInt)
-
-  /** Serialized (JVM-wide lock): the save/set/restore of the
-    * session-global shuffle-partition conf races under concurrent
-    * callers — one caller could capture another's temporary value as
-    * `prev` and "restore" it permanently. All drain-once runners
-    * route through [[runToTable]], so serializing here costs nothing
-    * at bench time and makes concurrent misuse safe.
-    */
-  def withStatePartitions[T](s: SparkSession, n: Int = 4)(body: => T): T =
-    StreamConf.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = s.conf.get(key)
-      s.conf.set(key, statePartsOverride.getOrElse(n).toString)
-      try body finally s.conf.set(key, prev)
-    }
-
   /** Ephemeral checkpoint root for run-to-completion test/bench
     * queries: tmpfs when the host has one. The offset/commit metadata
     * logs and state-store delta files fsync per micro-batch — on a
@@ -71,17 +50,28 @@ object StreamConf {
     * processAllAvailable, stop, checkpoint deleted; returns the sink
     * table. Every memory-sink site routes through here so the
     * checkpoint/state-partition policy lives in one place.
+    *
+    * The state-partition count is the session-global
+    * `spark.sql.shuffle.partitions`, set for the run and restored
+    * after it. Serialized (JVM-wide lock): the save/set/restore races
+    * under concurrent callers — one caller could capture another's
+    * temporary value as `prev` and "restore" it permanently.
     */
   def runToTable(s: SparkSession, df: org.apache.spark.sql.DataFrame,
       name: String, mode: String, statePartitions: Int = 4)
       : org.apache.spark.sql.DataFrame = {
-    withStatePartitions(s, statePartitions) {
-      val ckpt = ephemeralCheckpoint(name)
-      val q = df.writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", ckpt)
-        .outputMode(mode).start()
-      try q.processAllAvailable()
-      finally { q.stop(); dropCheckpoint(ckpt) }
+    StreamConf.synchronized {
+      val key = "spark.sql.shuffle.partitions"
+      val prev = s.conf.get(key)
+      s.conf.set(key, statePartitions.toString)
+      try {
+        val ckpt = ephemeralCheckpoint(name)
+        val q = df.writeStream.format("memory").queryName(name)
+          .option("checkpointLocation", ckpt)
+          .outputMode(mode).start()
+        try q.processAllAvailable()
+        finally { q.stop(); dropCheckpoint(ckpt) }
+      } finally s.conf.set(key, prev)
     }
     s.table(name)
   }

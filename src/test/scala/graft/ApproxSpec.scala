@@ -40,16 +40,6 @@ class ApproxSpec extends SparkSpec {
     new graft.ops.HllAgg(512) // boundary is legal
   }
 
-  test("LongVecSumAgg fails loudly on ragged vectors, both directions") {
-    val agg = new graft.ops.LongVecSumAgg
-    val b = agg.reduce(agg.zero, Seq(1L, 2L, 3L))
-    intercept[IllegalArgumentException] { agg.reduce(b, Seq(1L, 2L)) }
-    intercept[IllegalArgumentException] { agg.reduce(b, Seq(1L, 2L, 3L, 4L)) }
-    intercept[IllegalArgumentException] {
-      agg.merge(Array(1L, 2L), Array(1L, 2L, 3L))
-    }
-  }
-
   test("HistQuantileAgg: within half a bin of exact, partitioning-invariant") {
     val W = 10000L
     val p50 = udaf(new graft.ops.HistQuantileAgg(W, 1100, 1, 2))

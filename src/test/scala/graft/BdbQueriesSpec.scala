@@ -1,6 +1,7 @@
 package graft
 
 import graft.bdb._
+import org.apache.spark.graftbridge.JobCount
 
 /** Semantic spot-checks for the TPCx-BB queries on the deterministic
   * in-memory fixture. Full-result execution coverage of all 30
@@ -216,11 +217,9 @@ class BdbQueriesSpec extends SparkSpec {
 
   test("q20's k-means fit plans its features once (job count)") {
     ready
-    val sc = spark.sparkContext
-    val group = s"q20-jobs-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(group, group)
-    try BdbQueries2.q20(spark).collect() finally sc.clearJobGroup()
-    val jobs = sc.statusTracker.getJobIdsForGroup(group).length
+    val (_, jobs) = JobCount(spark.sparkContext) {
+      BdbQueries2.q20(spark).collect()
+    }
     assert(jobs <= Q20Jobs, s"q20 ran $jobs jobs")
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.bdb.BdbBenchmarkRunner
+import org.apache.spark.graftbridge.JobCount
 
 /** End-to-end drive of the E3 benchmark runner: fixture tables written
   * to the reference parquet layout (basePath/table dir), catalog
@@ -19,14 +20,12 @@ class BdbRunnerSpec extends SparkSpec {
     // the fixture as dataGen-style pipe CSV (no quoting)
     graft.bdb.BdbDataGen.writeCsv(spark, base, graft.bdb.BdbDataGen.Counts(0.0))
     val frames = BdbFixture.frames(spark)
-    val sc = spark.sparkContext
-    val group = s"loadtest-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(group, group)
-    val report = try graft.bdb.BdbCatalog.loadTest(spark, base, out)
-      finally sc.clearJobGroup()
+    val (report, jobs) = JobCount(spark.sparkContext) {
+      graft.bdb.BdbCatalog.loadTest(spark, base, out)
+    }
     // the pool's threads inherit the caller's job group: one job per
     // table (the row count rides the write), none outside the group
-    assert(sc.statusTracker.getJobIdsForGroup(group).length === 23)
+    assert(jobs === 23)
     assert(report.map(_._1) === graft.bdb.BdbSchemas.tables)
     report.foreach { case (t, n, secs) =>
       assert(n === frames(t).count(), s"$t row count drifted")

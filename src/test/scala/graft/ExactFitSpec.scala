@@ -27,7 +27,9 @@ class ExactFitSpec extends SparkSpec {
 
   test("argmin_l2_micro_d2 == (argmin_l2_micro, hand-computed d2), " +
     "ties to the lowest id in both") {
-    import graft.expressions.GraftFunctions.{argmin_l2_micro, argmin_l2_micro_d2}
+    import graft.expressions.GraftFunctions.argmin_l2_micro_d2
+    import graft.expressions.Kernels
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
     // centroids: id 5 -> (0,0), id 7 -> (3,4), id 9 -> (3,4) (ids 7/9
     // EXACTLY tied for every input — the tiebreak edge)
     val flat = Seq(0L, 0L, 3L, 4L, 3L, 4L)
@@ -44,15 +46,16 @@ class ExactFitSpec extends SparkSpec {
       val best = ds.map(_._2).min
       id -> ((ds.filter(_._2 == best).map(_._1).min, best))
     }.toMap
+    def arr(xs: Seq[Long]) = UnsafeArrayData.fromPrimitiveArray(xs.toArray)
     val got = rows.toDF("id", "v")
       .select(col("id"),
-        argmin_l2_micro(col("v"), typedlit(flat), typedlit(ids)).as("cid"),
         argmin_l2_micro_d2(col("v"), typedlit(flat), typedlit(ids)).as("ad"))
-      .collect().map(r => (r.getLong(0), r.getLong(1),
-        r.getSeq[Long](2).toList))
-    got.foreach { case (id, cid, ad) =>
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toList))
+    got.foreach { case (id, ad) =>
       val (eCid, eD2) = expected(id)
-      assert(cid === eCid, s"argmin for $id")
+      val v = rows.find(_._1 == id).get._2
+      assert(Kernels.argminL2Micro(arr(v), arr(flat), arr(ids)) === eCid,
+        s"argmin for $id")
       assert(ad === List(eCid, eD2), s"argmin_d2 for $id")
     }
   }
@@ -78,6 +81,50 @@ class ExactFitSpec extends SparkSpec {
     val one = jobs(1)
     assert(jobs(4) - one === 3)
     assert(one - 1 <= LloydFixedJobs, s"$one jobs at one round")
+  }
+
+  /** Messages and classes down a throwable's cause chain: a failure
+    * inside a task reaches the driver wrapped in a SparkException. */
+  private def causes(t: Throwable): Seq[Throwable] =
+    if (t == null) Nil else t +: causes(t.getCause)
+
+  test("ExactLloyd: a ragged vector column throws, not truncates") {
+    val fit = (rows: Seq[(Long, Seq[Long])]) => {
+      val qv = rows.toDF("_id", "qv")
+      ExactLloyd.fit(qv, qv.filter(col("_id") <= 2), iters = 1)
+    }
+    // a longer non-seed row: its extra dimension must not be dropped
+    val long = intercept[Exception] {
+      fit(Seq(1L -> Seq(0L, 0L), 2L -> Seq(5L, 5L), 3L -> Seq(1L, 1L, 9L)))
+    }
+    assert(causes(long).exists(_.getMessage.contains("centroid values")),
+      long.toString)
+    // a shorter row, and a ragged seed
+    val short = intercept[Exception] {
+      fit(Seq(1L -> Seq(0L, 0L), 2L -> Seq(5L, 5L), 3L -> Seq(1L)))
+    }
+    assert(causes(short).exists(_.getMessage.contains("centroid values")),
+      short.toString)
+    val seed = intercept[IllegalArgumentException] {
+      fit(Seq(1L -> Seq(0L, 0L), 2L -> Seq(5L, 5L, 5L)))
+    }
+    assert(seed.getMessage.contains("ragged seed vectors"))
+  }
+
+  test("ExactLloyd: a centroid sum past Long.MaxValue throws " +
+    "ArithmeticException") {
+    // one centroid, two members whose sum wraps a long: in one
+    // partition the task's addExact throws, across two the driver's
+    val big = Long.MaxValue / 2 + 1
+    for (parts <- Seq(1, 2)) {
+      val qv = Seq(1L -> Seq(big), 2L -> Seq(big)).toDF("_id", "qv")
+        .repartition(parts)
+      val e = intercept[Exception] {
+        ExactLloyd.fit(qv, qv.filter(col("_id") === 1L), iters = 1)
+      }
+      assert(causes(e).exists(_.isInstanceOf[ArithmeticException]),
+        s"$parts partition(s): $e")
+    }
   }
 
   /** Jobs of a fit besides its rounds, on a frame not keyed by id:

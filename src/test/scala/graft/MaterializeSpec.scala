@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.Materialize
 import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.graftbridge.JobCount
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
@@ -48,13 +49,12 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("count: withCount returns the row count from its one job") {
-    val sc = spark.sparkContext
     // a narrow plan: a shuffle would add its AQE stage jobs
     val df = spark.range(0, 1000, 1, 4).toDF().filter(col("id") % 3 === 0)
-    val group = s"materializespec-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(group, group)
-    val (m, n) = try Materialize.withCount(df) finally sc.clearJobGroup()
-    assert(sc.statusTracker.getJobIdsForGroup(group).length === 1)
+    val ((m, n), jobs) = JobCount(spark.sparkContext) {
+      Materialize.withCount(df)
+    }
+    assert(jobs === 1)
     assert(n === 334L)
     assert(m.count() === 334L)
   }

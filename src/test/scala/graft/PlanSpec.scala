@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graftbridge.JobCount
+
 /** Physical-plan assertions — the 100 TB story is in the plan shape,
   * not just the results: filters/projections must reach the parquet
   * scan, small dims must broadcast, top-k must plan
@@ -202,14 +204,15 @@ class PlanSpec extends SparkSpec {
     assert(nullAware >= 1, p.take(4000))
   }
 
-  test("m02: Lloyd iterations broadcast centroids and assignments") {
-    val p = plan("m02_kmeans_iter3")
-    // every per-iteration join (vs 8x64 centroids, vs n-row
-    // assignment) must be a broadcast — a shuffle join against the
-    // exploded (n x dims) table would shuffle the big side 3x
-    assert(p.contains("BroadcastHashJoin"), p.take(3000))
-    assert(!p.contains("SortMergeJoin"),
-      "centroid/assignment join fell back to SMJ:\n" + p.take(3000))
+  test("m02: one job to seed and one per Lloyd round (job count)") {
+    // ExactLloyd.fit: the vec_id < 8 seed collect, then each round is
+    // one job of per-partition exact sums; the answer is read off the
+    // fit, so no assignment, shuffle or join job follows (12 when each
+    // round grouped by cluster through an aggregate and collected)
+    val (_, jobs) = JobCount(spark.sparkContext) {
+      SparkEntry.queries("m02_kmeans_iter3")(spark, sf).collect()
+    }
+    assert(jobs <= 4, s"m02 ran $jobs jobs")
   }
 
   test("m04: class prior/default tables broadcast; no cartesian blowup") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Quality
+import org.apache.spark.graftbridge.JobCount
 import org.apache.spark.sql.functions._
 
 /** Observation-based quality counters must (a) report exact counts and
@@ -68,17 +69,11 @@ class QualitySpec extends SparkSpec {
   }
 
   test("observation does not spawn extra jobs vs the bare action") {
-    val sc = spark.sparkContext
     // count jobs in a DEDICATED job group: the default-group count is
     // perturbed by every other suite sharing this session, and the
     // status tracker's retained-jobs window evicts old ids mid-test
     // on long runs (observed as a negative delta)
-    def countJobs(body: => Unit): Int = {
-      val group = s"qualityspec-${java.util.UUID.randomUUID()}"
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      sc.statusTracker.getJobIdsForGroup(group).length
-    }
+    def countJobs(body: => Unit): Int = JobCount(spark.sparkContext)(body)._2
     val df = Tables.load(spark, sf, "orders").select("o_orderkey")
     // baseline: identical write WITHOUT observation
     val bare = countJobs {
